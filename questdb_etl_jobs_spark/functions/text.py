@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from questdb_etl_jobs_spark import sqltext
+
 #: "BPE-ish" token pattern: letter runs, digit runs, single other symbols.
 BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -45,54 +47,89 @@ def regex_token_count(text: Column | str, pattern: str = BPE_TOKEN_PATTERN) -> C
     return F.regexp_count(_c(text), F.lit(pattern))
 
 
-def punct_ratio(text: Column | str) -> Column:
-    """Non-alphanumeric-non-space characters per character.
+#: Non-alphanumeric-non-space characters (the punct_ratio numerator).
+_PUNCT_PATTERN = r"[^A-Za-z0-9\s]"
 
-    Zero-length documents score 0.0 — under ANSI mode (Spark 4 default) an
-    unguarded division would fail the whole query with DIVIDE_BY_ZERO.
-    """
-    t = _c(text)
-    return F.when(
-        F.length(t) > 0,
-        F.regexp_count(t, F.lit(r"[^A-Za-z0-9\s]")) / F.length(t),
-    ).otherwise(F.lit(0.0))
+# Each metric below has ONE formula, an SQL string over SQL operands: the
+# public functions parse it over a column name (one py4j call instead of
+# one per Column node — r19, guide §5) and text_profile parses the same
+# string over its materialized tokens.
 
 
-def _member_count(tokens: Column, words: list[str]) -> Column:
-    lit = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(tokens, lambda t: F.array_contains(lit, t)))
+def _toks_sql(text: str) -> str:
+    return f"split({sqltext.ident(text)}, ' ')"
 
 
-def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Column:
-    tokens = whitespace_tokens(text)
-    return _member_count(tokens, stopwords or STOPWORDS) / F.size(tokens)
-
-
-def avg_token_length(text: Column | str) -> Column:
-    tokens = whitespace_tokens(text)
-    total = F.aggregate(
-        tokens, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
+def _punct_ratio_sql(t: str) -> str:
+    # Zero-length documents score 0.0 — under ANSI mode (Spark 4 default)
+    # an unguarded division would fail the query with DIVIDE_BY_ZERO.
+    pattern = sqltext.literal(_PUNCT_PATTERN)
+    return (
+        f"CASE WHEN length({t}) > 0 "
+        f"THEN regexp_count({t}, {pattern}) / length({t}) ELSE 0.0D END"
     )
-    return total / F.size(tokens)
 
 
-def quality_score(text: Column | str) -> Column:
+def _member_count_sql(toks: str, words: list[str]) -> str:
+    return (
+        f"size(filter({toks}, x -> "
+        f"array_contains({sqltext.literal(words)}, x)))"
+    )
+
+
+def _stop_ratio_sql(toks: str, stopwords: list[str]) -> str:
+    return f"{_member_count_sql(toks, stopwords)} / size({toks})"
+
+
+def _avg_tok_len_sql(toks: str) -> str:
+    return (
+        f"aggregate({toks}, CAST(0 AS BIGINT), (acc, x) -> acc + length(x))"
+        f" / size({toks})"
+    )
+
+
+def _quality_sql(t: str, punct: str, awl: str, stop: str) -> str:
+    """Heuristic document quality in [0, 1] from its metric operands."""
+    return (
+        f"0.3D * least(length({t}) / 400.0D, 1.0D) "
+        f"+ 0.3D * greatest(0.0D, 1.0D - {punct} * 10.0D) "
+        f"+ 0.2D * (CASE WHEN {awl} >= 3 AND {awl} <= 10 "
+        "THEN 1.0D ELSE 0.3D END) "
+        f"+ 0.2D * least({stop} * 5.0D, 1.0D)"
+    )
+
+
+def punct_ratio(text: str) -> Column:
+    """Non-alphanumeric-non-space characters per character (0.0 for an
+    empty document)."""
+    return F.expr(_punct_ratio_sql(sqltext.ident(text)))
+
+
+def stopword_ratio(text: str, stopwords: list[str] | None = None) -> Column:
+    return F.expr(_stop_ratio_sql(_toks_sql(text), stopwords or STOPWORDS))
+
+
+def avg_token_length(text: str) -> Column:
+    return F.expr(_avg_tok_len_sql(_toks_sql(text)))
+
+
+def quality_score(text: str) -> Column:
     """Heuristic document quality in [0, 1]: long enough, not punct-heavy,
     plausible word lengths, some stopwords. Deterministic arithmetic only —
     weights are convention, the contract is the exact formula."""
-    t = _c(text)
-    length_term = F.least(F.length(t) / F.lit(400.0), F.lit(1.0))
-    punct_term = F.greatest(F.lit(0.0), F.lit(1.0) - punct_ratio(t) * 10.0)
-    awl = avg_token_length(t)
-    wordlen_term = F.when((awl >= 3) & (awl <= 10), 1.0).otherwise(0.3)
-    stop_term = F.least(stopword_ratio(t) * 5.0, F.lit(1.0))
-    return (
-        0.3 * length_term + 0.3 * punct_term + 0.2 * wordlen_term + 0.2 * stop_term
+    t, toks = sqltext.ident(text), _toks_sql(text)
+    return F.expr(
+        _quality_sql(
+            t,
+            _punct_ratio_sql(t),
+            _avg_tok_len_sql(toks),
+            _stop_ratio_sql(toks, STOPWORDS),
+        )
     )
 
 
-def _lang_expr(tokens: Column) -> Column:
-    """argmax-of-marker-hits over a tokens column.
+def _lang_best_sql(toks: str) -> str:
+    """The winning ``(score, -index)`` struct of the marker argmax.
 
     Single evaluation per language AND a single pass over the score
     array: each language contributes a ``(score, -index)`` struct and
@@ -104,71 +141,34 @@ def _lang_expr(tokens: Column) -> Column:
     would be worse still — codegen's subexpression elimination does not
     descend into conditional branches).
     """
-    return _lang_from_best(_lang_best(tokens))
-
-
-def _lang_best(tokens: Column) -> Column:
-    """The winning ``(score, -index)`` struct of the marker argmax."""
-    entries = F.array(
-        *[
-            F.struct(
-                _member_count(tokens, LANG_MARKERS[lang]).alias("s"),
-                F.lit(-i).alias("ni"),
-            )
-            for i, lang in enumerate(LANG_MARKERS)
-        ]
-    )
-    return F.array_max(entries)
-
-
-def _lang_best_sql(toks: str) -> str:
-    """:func:`_lang_best` as ONE SQL string over a ``toks`` reference —
-    the identical tree (struct(size(filter(...)) AS s, -i AS ni) per
-    language, array_max picks the winner) minus ~100 py4j calls per
-    build (r19, guide §5)."""
     entries = ", ".join(
-        "struct(size(filter({toks}, x -> array_contains("
-        "array({markers}), x))) AS s, {ni} AS ni)".format(
-            toks=toks,
-            markers=", ".join(f"'{w}'" for w in LANG_MARKERS[lang]),
-            ni=-i,
-        )
+        f"struct({_member_count_sql(toks, LANG_MARKERS[lang])} AS s, "
+        f"{sqltext.literal(-i)} AS ni)"
         for i, lang in enumerate(LANG_MARKERS)
     )
     return f"array_max(array({entries}))"
 
 
-def _lang_from_best(best: Column) -> Column:
-    """Winner name from a (score, -index) struct (see :func:`_lang_best`)."""
-    langs = list(LANG_MARKERS)
-    winner = F.element_at(
-        F.array(*[F.lit(lang) for lang in langs]),
-        (-best["ni"] + 1).cast("int"),
-    )
-    return F.when(best["s"] > 0, winner).otherwise(F.lit("und"))
-
-
-def lang_guess(text: Column | str) -> Column:
-    """Heuristic language ID: argmax of marker-token hits (ties resolve in
-    LANG_MARKERS order); 'und' when nothing matches.
-
-    Column-name input takes the JVM-parsed spelling (identical tree,
-    ~130 fewer py4j calls per build — r19 §5); Column input keeps the
-    Column-API composition.
-    """
-    if isinstance(text, str):
-        return F.expr(_lang_guess_sql(f"split(`{text}`, ' ')"))
-    return _lang_expr(whitespace_tokens(text))
-
-
-def _lang_guess_sql(toks: str) -> str:
-    """The full :func:`_lang_expr` argmax→name expression as SQL."""
-    langs_arr = ", ".join(f"'{lang}'" for lang in LANG_MARKERS)
-    best = _lang_best_sql(toks)
+def _lang_from_best_sql(best: str) -> str:
+    """Winner name from a (score, -index) struct (:func:`_lang_best_sql`)."""
     return (
-        f"CASE WHEN ({best}).s > 0 THEN element_at(array({langs_arr}), "
-        f"CAST(-({best}).ni + 1 AS INT)) ELSE 'und' END"
+        f"CASE WHEN {best}.s > 0 THEN element_at("
+        f"{sqltext.literal(list(LANG_MARKERS))}, CAST(-{best}.ni + 1 AS INT)) "
+        "ELSE 'und' END"
     )
+
+
+def lang_guess(text: str) -> Column:
+    """Heuristic language ID: argmax of marker-token hits (ties resolve in
+    LANG_MARKERS order); 'und' when nothing matches."""
+    return F.expr(_lang_from_best_sql(f"({_lang_best_sql(_toks_sql(text))})"))
+
+
+def _row_local_sql(expr: str, field: str) -> str:
+    """Generate barrier binding ``expr`` as a row-local attribute: explode
+    of a one-element struct array (never empty or null, so every row is
+    kept) evaluates ``expr`` once per row."""
+    return f"explode(array(struct({expr} AS {field})))"
 
 
 def text_profile(df: DataFrame, text_col: str) -> DataFrame:
@@ -183,29 +183,16 @@ def text_profile(df: DataFrame, text_col: str) -> DataFrame:
     one-element struct array evaluates its child once per row and binds
     it as a real attribute (row-local, zero shuffle). The language
     argmax is the single-traversal struct-max form (see
-    :func:`_lang_expr`), so no second barrier is needed. Measured ~35%
-    faster end-to-end at sf0.1 than the barrier-less form.
+    :func:`_lang_best_sql`), so no second barrier is needed. Measured
+    ~35% faster end-to-end at sf0.1 than the barrier-less form.
 
     Adds columns n_tokens, n_bpe, punct_ratio, stop_ratio, avg_tok_len,
     quality, lang_guess (all unrounded).
     """
-    # JVM-parsed expressions throughout (r19, guide §5): the old
-    # Column-API spelling cost ~270 ms of py4j round trips per build
-    # (rebuilt every bench pass) — the marker-lexicon literals alone
-    # were ~60 calls. Each string below parses to the IDENTICAL tree
-    # (0.3D/1.0D double literals match F.lit(0.3)'s doubles; `/` on
-    # int operands is Spark's fractional divide, same as Column `/`).
-    # The regex metrics stay Column-API: their patterns contain
-    # backslashes that SQL string-literal unescaping would mangle.
-    t = F.col(text_col)
-    # Barrier: the token array (the 1-element array literal is never
-    # empty or null, so explode keeps every row — null text just yields
-    # a null toks attribute, same as the inline expression).
+    # Barrier: the token array (null text just yields a null toks
+    # attribute, same as the inline expression).
     with_toks = df.select(
-        "*",
-        F.expr(
-            f"explode(array(struct(split(`{text_col}`, ' ') AS toks)))"
-        ).alias("__m"),
+        "*", F.expr(_row_local_sql(_toks_sql(text_col), "toks")).alias("__m")
     )
     # Second barrier (r18): the language argmax struct is referenced
     # three times (score test + winner index), and its marker filters
@@ -213,43 +200,24 @@ def text_profile(df: DataFrame, text_col: str) -> DataFrame:
     # elimination, so inline references re-ran all four filters per
     # reference (12 token-array scans per row instead of 4). Binding the
     # argmax result as a row-local attribute evaluates it once.
-    with_best = with_toks.select(
-        "*",
-        F.expr(
-            "explode(array(struct({best} AS b)))".format(
-                best=_lang_best_sql("__m.toks")
-            )
-        ).alias("__lb"),
-    )
-    langs_arr = ", ".join(f"'{lang}'" for lang in LANG_MARKERS)
-    stop_arr = ", ".join(f"'{w}'" for w in STOPWORDS)
+    best = _row_local_sql(_lang_best_sql("__m.toks"), "b")
+    with_best = with_toks.select("*", F.expr(best).alias("__lb"))
     out = with_best.select(
         "*",
         F.expr("size(__m.toks)").alias("n_tokens"),
-        regex_token_count(t).cast("int").alias("n_bpe"),
-        punct_ratio(t).alias("punct_ratio"),
-        F.expr(
-            f"size(filter(__m.toks, x -> array_contains(array({stop_arr}), x)))"
-            " / size(__m.toks)"
-        ).alias("stop_ratio"),
-        F.expr(
-            "aggregate(__m.toks, CAST(0 AS BIGINT), (acc, x) -> acc + length(x))"
-            " / size(__m.toks)"
-        ).alias("avg_tok_len"),
-        F.expr(
-            "CASE WHEN __lb.b.s > 0 THEN element_at("
-            f"array({langs_arr}), CAST(-__lb.b.ni + 1 AS INT)) "
-            "ELSE 'und' END"
-        ).alias("lang_guess"),
+        regex_token_count(text_col).cast("int").alias("n_bpe"),
+        punct_ratio(text_col).alias("punct_ratio"),
+        F.expr(_stop_ratio_sql("__m.toks", STOPWORDS)).alias("stop_ratio"),
+        F.expr(_avg_tok_len_sql("__m.toks")).alias("avg_tok_len"),
+        F.expr(_lang_from_best_sql("__lb.b")).alias("lang_guess"),
     )
     return out.withColumn(
         "quality",
         F.expr(
-            f"0.3D * least(length(`{text_col}`) / 400.0D, 1.0D) "
-            "+ 0.3D * greatest(0.0D, 1.0D - punct_ratio * 10.0D) "
-            "+ 0.2D * (CASE WHEN avg_tok_len >= 3 AND avg_tok_len <= 10 "
-            "THEN 1.0D ELSE 0.3D END) "
-            "+ 0.2D * least(stop_ratio * 5.0D, 1.0D)"
+            _quality_sql(
+                sqltext.ident(text_col),
+                "punct_ratio", "avg_tok_len", "stop_ratio",
+            )
         ),
     ).drop("__m", "__lb")
 

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from questdb_etl_jobs_spark import sqltext
+
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
@@ -103,7 +105,7 @@ def sign_project(vec: Column | str, signs: list[list[int]]) -> Column:
     v = _c(vec).cast("array<double>")
 
     def coord(row: list[int]) -> Column:
-        sarr = F.array(*[F.lit(float(s)) for s in row])
+        sarr = F.expr(sqltext.literal([float(s) for s in row]))
         prod = F.zip_with(v, sarr, lambda x, s: x * s)
         return F.lit(scale) * F.aggregate(
             prod, F.lit(0.0), lambda acc, t: acc + t

@@ -39,6 +39,8 @@ from decimal import Decimal
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from questdb_etl_jobs_spark import sqltext
+
 
 @dataclass(frozen=True)
 class KMeansModel:
@@ -129,48 +131,25 @@ def _centroid_matrix(centroids: list[list[float]], spark=None) -> Column:
     ``array(*[lit(x) ...])`` recursively), which at k × dim = 1,792
     elements measured 1.0–1.6 s of pure driver-side plan construction
     per action — the dominant cost of the whole k-means|| init chain.
-    Parsing the equivalent ``array(array(<v>D, ...), ...)`` SQL text is
-    ONE py4j call; the JVM parser builds the identical foldable
-    CreateArray tree (constant-folded to the same Literal before
-    codegen). Values round-trip bit-exactly: ``repr(float)`` is
-    shortest-correct and ``Double.parseDouble`` is correctly rounded,
-    and the ``D`` suffix pins the SQL type to DOUBLE (a bare decimal
-    literal would parse as DECIMAL). Non-finite components (never
-    produced by the fit/init, which exclude malformed vectors by
-    contract) fall back to the per-element path, which handles them.
+    Parsing the equivalent SQL text (spelled bit-exactly by
+    :mod:`sqltext`) is ONE py4j call; the JVM parser builds the
+    identical foldable CreateArray tree (constant-folded to the same
+    Literal before codegen).
     """
-    rows = [[float(x) for x in c] for c in centroids]
-    import math
-
-    if rows and all(math.isfinite(x) for r in rows for x in r):
-        sql = "array({})".format(
-            ",".join(
-                "array({})".format(",".join(f"{x!r}D" for x in r))
-                for r in rows
-            )
-        )
-        # Pre-fold the parsed CreateArray tree into ONE Literal node
-        # before handing it to callers: every Dataset creation re-runs
-        # the full analyzer over its plan, and a k × dim CreateArray
-        # tree measurably scales that cost (~0.2 s per 1,000 elements
-        # per Dataset at local measurement). Optimizing a one-row
-        # projection of the parsed text constant-folds it once; the
-        # extracted Literal is the same node the optimizer would have
-        # produced downstream anyway (bit-identical by construction),
-        # so plans, codegen and values are unchanged — only the
-        # analyzer's node count drops. Any internal-API drift falls
-        # back to the parsed-tree column (see _try_prefold; warns once,
-        # and the two paths are equivalence-pinned by unit test).
-        folded = _try_prefold(sql, spark)
-        if folded is not None:
-            return folded
-        return F.expr(sql)
-    try:
-        return F.lit(rows)
-    except Exception:
-        # Older builds without nested-list lit support: one array
-        # literal per centroid (k py4j calls — still O(k), not O(k·dim)).
-        return F.array(*[F.lit(r) for r in rows])
+    sql = sqltext.literal([[float(x) for x in c] for c in centroids])
+    # Pre-fold the parsed CreateArray tree into ONE Literal node before
+    # handing it to callers: every Dataset creation re-runs the full
+    # analyzer over its plan, and a k × dim CreateArray tree measurably
+    # scales that cost (~0.2 s per 1,000 elements per Dataset at local
+    # measurement). Optimizing a one-row projection of the parsed text
+    # constant-folds it once; the extracted Literal is the same node the
+    # optimizer would have produced downstream anyway (bit-identical by
+    # construction), so plans, codegen and values are unchanged — only
+    # the analyzer's node count drops. Any internal-API drift falls back
+    # to the parsed-tree column (see _try_prefold; warns once, and the
+    # two paths are equivalence-pinned by unit test).
+    folded = _try_prefold(sql, spark)
+    return folded if folded is not None else F.expr(sql)
 
 
 #: Envelope of the plan-literal distance path: total literal elements
@@ -611,9 +590,7 @@ def _parallel_init_rounds(
         same values: ids[nc] == nc + offset by construction)."""
         beats = F.col("__nd") < F.col("__d")
         ids = F.expr(
-            "array({})".format(
-                ",".join(str(offset + i) for i in range(len(batch)))
-            )
+            sqltext.literal([offset + i for i in range(len(batch))])
         )
         return (
             assign_clusters(

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from questdb_etl_jobs_spark import sqltext
 from questdb_etl_jobs_spark.functions.text import whitespace_tokens
 
 
@@ -135,17 +136,20 @@ def _with_toks(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.select(
         F.col(id_col),
         F.expr(
-            f"explode(array(struct(split(`{text_col}`, ' ') AS toks)))"
+            "explode(array(struct("
+            f"split({sqltext.ident(text_col)}, ' ') AS toks)))"
         ).alias("__m"),
     )
 
 
 def _hashed_grams_sql(n: int) -> str:
     """The distinct hashed-shingle-set expression over ``__m.toks``."""
-    args = ", ".join(f"try_element_at(__m.toks, i + {j})" for j in range(n))
+    args = ", ".join(
+        f"try_element_at(__m.toks, i + {sqltext.literal(j)})" for j in range(n)
+    )
     return (
-        f"array_distinct(transform("
-        f"sequence(1, greatest(size(__m.toks) - {n - 1}, 1)), "
+        f"array_distinct(transform(sequence(1, "
+        f"greatest(size(__m.toks) - {sqltext.literal(n - 1)}, 1)), "
         f"i -> xxhash64({args})))"
     )
 
@@ -162,7 +166,7 @@ def hashed_shingle_rows(
     with_toks = _with_toks(df, id_col, text_col)
     return with_toks.select(
         F.col(id_col),
-        F.expr(f"explode({_hashed_grams_sql(n)})").alias("__hs"),
+        F.explode(F.expr(_hashed_grams_sql(n))).alias("__hs"),
     )
 
 
@@ -177,8 +181,8 @@ def jaccard(a: Column, b: Column) -> Column:
 # MinHash + banded LSH
 # ---------------------------------------------------------------------------
 
-def _signature_agg_expr(n_hashes: int):
-    """``array(min(xxhash64(__hs, 0)), …)`` as ONE parsed expression.
+def _signature_agg_sql(n_hashes: int) -> str:
+    """``array(min(xxhash64(__hs, 0)), …)``, parsed as ONE expression.
 
     r18 optimization (driver-side): spelling the n_hashes min-aggregates
     as individual ``F.min(F.xxhash64(...))`` columns plus a post-agg
@@ -187,13 +191,10 @@ def _signature_agg_expr(n_hashes: int):
     identical aggregate tree (array-of-aggregates is a plain result
     expression — the partial/final split per min is unchanged, verified
     by byte-identical signatures)."""
-    return F.expr(
-        "array({})".format(
-            ",".join(
-                f"min(xxhash64(__hs, {i}))" for i in range(n_hashes)
-            )
-        )
+    mins = ", ".join(
+        f"min(xxhash64(__hs, {sqltext.literal(i)}))" for i in range(n_hashes)
     )
+    return f"array({mins})"
 
 
 def minhash_signature(
@@ -224,7 +225,7 @@ def minhash_signature(
     """
     exploded = hashed_shingle_rows(df, id_col, text_col, shingle_words)
     return exploded.groupBy(id_col).agg(
-        _signature_agg_expr(n_hashes).alias("signature")
+        F.expr(_signature_agg_sql(n_hashes)).alias("signature")
     )
 
 
@@ -250,7 +251,7 @@ def signature_and_shingles(
     """
     exploded = hashed_shingle_rows(df, id_col, text_col, shingle_words)
     return exploded.groupBy(id_col).agg(
-        _signature_agg_expr(n_hashes).alias("signature"),
+        F.expr(_signature_agg_sql(n_hashes)).alias("signature"),
         F.collect_set("__hs").alias("__sh"),
     )
 
@@ -273,9 +274,9 @@ def band_rows(
     the same double-divide-then-int-cast arithmetic — minus ~30 py4j
     round trips per pipeline build.
     """
-    width = f"CAST(size(signature) / {n_bands} AS INT)"
+    width = f"CAST(size(signature) / {sqltext.literal(n_bands)} AS INT)"
     sql = (
-        f"posexplode(transform(sequence(0, {n_bands - 1}), "
+        f"posexplode(transform(sequence(0, {sqltext.literal(n_bands - 1)}), "
         f"b -> xxhash64(slice(signature, b * {width} + 1, {width}))))"
     )
     return signatures.select(
@@ -330,7 +331,11 @@ def lsh_candidate_pairs(
         # per build for the nested two-lambda enumeration.
         buckets = (
             bands.groupBy("__band", "__band_hash")
-            .agg(F.expr(f"array_sort(collect_set(`{id_col}`))").alias("__ids"))
+            .agg(
+                F.expr(
+                    f"array_sort(collect_set({sqltext.ident(id_col)}))"
+                ).alias("__ids")
+            )
             .filter(F.size("__ids") > 1)
         )
         pairs = buckets.select(
@@ -378,7 +383,8 @@ def lsh_candidate_pairs(
             ).alias("__pair")
         )
     return pairs.selectExpr(
-        f"__pair.a AS `{id_col}_a`", f"__pair.b AS `{id_col}_b`"
+        f"__pair.a AS {sqltext.ident(id_col + '_a')}",
+        f"__pair.b AS {sqltext.ident(id_col + '_b')}",
     ).distinct()
 
 
@@ -417,19 +423,21 @@ def near_dup_pairs(
     verified = (
         cands.join(
             sh_sets.selectExpr(
-                f"`{id_col}` AS `{id_col}_a`", "__sh AS __sh_a"
+                f"{sqltext.ident(id_col)} AS {sqltext.ident(id_col + '_a')}",
+                "__sh AS __sh_a",
             ),
             f"{id_col}_a",
         )
         .join(
             sh_sets.selectExpr(
-                f"`{id_col}` AS `{id_col}_b`", "__sh AS __sh_b"
+                f"{sqltext.ident(id_col)} AS {sqltext.ident(id_col + '_b')}",
+                "__sh AS __sh_b",
             ),
             f"{id_col}_b",
         )
         .selectExpr(
-            f"`{id_col}_a`",
-            f"`{id_col}_b`",
+            sqltext.ident(id_col + "_a"),
+            sqltext.ident(id_col + "_b"),
             "CASE WHEN size(array_union(__sh_a, __sh_b)) > 0 "
             "THEN CAST(size(array_intersect(__sh_a, __sh_b)) AS DOUBLE) "
             "/ size(array_union(__sh_a, __sh_b)) "
@@ -442,6 +450,10 @@ def near_dup_pairs(
 # ---------------------------------------------------------------------------
 # Duplicate-cluster resolution (connected components)
 # ---------------------------------------------------------------------------
+
+#: Edge endpoint columns of the dup_clusters propagation loop.
+_SRC, _DST = "__cc_src", "__cc_dst"
+
 
 def dup_clusters(
     edges: DataFrame,
@@ -505,25 +517,28 @@ def dup_clusters(
       narrow union re-read of checkpoint blocks, and the per-round label
       checkpoints keep the plan from growing.
     """
-    src, dst = "__cc_src", "__cc_dst"
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     # Materialize the (possibly expensive) edge subtree ONCE; every
     # round's sym re-read derives from this checkpoint.
     half = edges.select(
-        F.col(id_a).alias(src), F.col(id_b).alias(dst)
+        F.col(id_a).alias(_SRC), F.col(id_b).alias(_DST)
     ).localCheckpoint()
     sym = (
-        half.unionByName(half.selectExpr(f"{dst} AS {src}", f"{src} AS {dst}"))
-        .unionByName(half.selectExpr(src, f"{src} AS {dst}"))
-        .unionByName(half.selectExpr(f"{dst} AS {src}", dst))
+        half.unionByName(
+            half.selectExpr(f"{_DST} AS {_SRC}", f"{_SRC} AS {_DST}")
+        )
+        .unionByName(half.selectExpr(_SRC, f"{_SRC} AS {_DST}"))
+        .unionByName(half.selectExpr(f"{_DST} AS {_SRC}", _DST))
     )
     # Round 1 fused: one aggregate, no join, no initial-labels Dataset.
-    # Labels stay keyed by ``dst`` THROUGH the loop (r19): the r18 shape
-    # renamed node↔dst twice per round, and withColumnRenamed forces a
+    # Labels stay keyed by ``_DST`` THROUGH the loop (r19): the r18 shape
+    # renamed node↔_DST twice per round, and withColumnRenamed forces a
     # full analyzer pass each time — ~0.2 s of driver time per round at
-    # three analyses/round. Aliasing the group key to ``dst`` leaves
+    # three analyses/round. Aliasing the group key to ``_DST`` leaves
     # localCheckpoint's analysis as the only one per round.
-    labels = sym.groupBy(F.col(src).alias(dst)).agg(
-        F.min(dst).alias("cluster")
+    labels = sym.groupBy(F.col(_SRC).alias(_DST)).agg(
+        F.min(_DST).alias("cluster")
     )
     if max_iter < 2:  # degenerate: certify/truncate round 1 itself
         labels = labels.localCheckpoint(eager=False)
@@ -531,8 +546,8 @@ def dup_clusters(
     for rnd in range(2, max_iter + 1):
         # Self-loops make min(neighborhood ∪ self) the whole update rule.
         labels = (
-            sym.join(labels, dst)
-            .groupBy(F.col(src).alias(dst))
+            sym.join(labels, _DST)
+            .groupBy(F.col(_SRC).alias(_DST))
             .agg(F.min("cluster").alias("cluster"))
         )
         if rnd % check_stride and rnd < max_iter:
@@ -554,7 +569,7 @@ def dup_clusters(
         if cur == prev_sum:
             break
         prev_sum = cur
-    return labels.selectExpr(f"{dst} AS node", "cluster")
+    return labels.selectExpr(f"{_DST} AS node", "cluster")
 
 
 # ---------------------------------------------------------------------------

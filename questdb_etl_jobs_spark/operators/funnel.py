@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from questdb_etl_jobs_spark import sqltext
+
 
 def funnel_stages(
     df: DataFrame,
@@ -111,10 +113,17 @@ def funnel_counts(
             for k in range(1, len(steps) + 1)
         ]
     )
-    stack_args = ", ".join(
-        f"{k}, '{steps[k - 1]}', coalesce(_s{k}, 0L)"
-        for k in range(1, len(steps) + 1)
+    return row.selectExpr(_stack_sql(steps)).orderBy("stage")
+
+
+def _stack_sql(steps: list[str]) -> str:
+    """``stack`` of (stage, step, n_users) rows over the per-stage sums
+    ``_s<k>``."""
+    rows = ", ".join(
+        f"{sqltext.literal(k)}, {sqltext.literal(step)}, coalesce(_s{k}, 0L)"
+        for k, step in enumerate(steps, start=1)
     )
-    return row.selectExpr(
-        f"stack({len(steps)}, {stack_args}) AS (stage, step, n_users)"
-    ).orderBy("stage")
+    return (
+        f"stack({sqltext.literal(len(steps))}, {rows}) "
+        "AS (stage, step, n_users)"
+    )

@@ -24,6 +24,8 @@ import datetime as _dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from questdb_etl_jobs_spark import sqltext
+
 _BUCKET = "__iv_bucket"
 
 
@@ -39,26 +41,29 @@ def interval_join(
     """Join rows with ``|left.left_ts - right.right_ts| <= tolerance``,
     optionally also matching equality on ``on`` key columns.
 
-    ``tolerance`` is an SQL interval string (``"1 hour"``) or timedelta.
+    ``tolerance`` is an ``"<n> <unit>"`` interval string (``"1 hour"``,
+    see :func:`sqltext.interval_us`) or a timedelta.
     Column-name collisions between the two inputs must be resolved by the
     caller (rename before joining); ``left_ts``/``right_ts`` may differ.
     """
     if how != "inner":
         raise ValueError("interval_join supports how='inner'")
     if isinstance(tolerance, str):
-        parts = tolerance.split()
-        tol = _dt.timedelta(**{_unit(parts[1]): float(parts[0])})
+        tol_us = sqltext.interval_us(tolerance)
     else:
-        tol = tolerance
-    tol_us = int(tol.total_seconds() * 1_000_000)
+        tol_us = int(tolerance.total_seconds() * 1_000_000)
     if tol_us <= 0:
         raise ValueError("tolerance must be positive")
     on = list(on or [])
 
     # Integer division — float division of µs epochs loses exactness near
     # bucket boundaries. (DIV truncates toward zero: fine post-1970.)
-    lb = F.expr(f"unix_micros({left_ts}) DIV {tol_us}")
-    rb = F.expr(f"unix_micros({right_ts}) DIV {tol_us}")
+    lb = F.expr(
+        f"unix_micros({sqltext.ident(left_ts)}) DIV {sqltext.literal(tol_us)}"
+    )
+    rb = F.expr(
+        f"unix_micros({sqltext.ident(right_ts)}) DIV {sqltext.literal(tol_us)}"
+    )
     left_exploded = left.withColumn(
         _BUCKET, F.explode(F.array(lb - 1, lb, lb + 1))
     )
@@ -70,19 +75,3 @@ def interval_join(
         <= F.lit(tol_us)
     )
     return refined.drop(_BUCKET)
-
-
-def _unit(word: str) -> str:
-    word = word.rstrip("s")
-    mapping = {
-        "second": "seconds",
-        "minute": "minutes",
-        "hour": "hours",
-        "day": "days",
-        "millisecond": "milliseconds",
-        "microsecond": "microseconds",
-        "week": "weeks",
-    }
-    if word not in mapping:
-        raise ValueError(f"unsupported interval unit: {word!r}")
-    return mapping[word]

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from questdb_etl_jobs_spark import sqltext
+
 
 def pack_sequences(
     df: DataFrame,
@@ -50,11 +52,15 @@ def pack_sequences(
     # Integer division (DIV), not floor(double /): token offsets at corpus
     # scale can pass 2^53 where double division loses exactness.
     return (
-        out.withColumn("bin", F.expr(f"__start DIV {budget}"))
+        out.withColumn("bin", F.expr(f"__start DIV {sqltext.literal(budget)}"))
         .withColumn("bin_offset", F.col("__start") % budget)
         .withColumn(
             "n_spans",
-            F.expr(f"(__start + {tokens_col} - 1) DIV {budget}") - F.col("bin"),
+            F.expr(
+                f"(__start + {sqltext.ident(tokens_col)} - 1) "
+                f"DIV {sqltext.literal(budget)}"
+            )
+            - F.col("bin"),
         )
         .drop("__start")
     )

@@ -14,6 +14,8 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from questdb_etl_jobs_spark import sqltext
+
 #: Buckets accepted as date_trunc units (calendar-aligned, matches the
 #: DuckDB oracle's date_trunc semantics).
 _TRUNC_UNITS = {
@@ -38,29 +40,20 @@ _FIXED_WIDTH_US = {
 }
 
 
-#: Units legal in an "<n> <unit>s" stride via the epoch-µs floor. The
-#: single-unit date_trunc forms are CALENDAR-aligned (local-tz hour/day
-#: boundaries — hence the tz gate below), but Spark's ``window()`` —
-#: the path multi-unit strides took before — aligns to the UTC epoch
-#: unconditionally, so the integer floor is value-identical to
-#: ``window(...).start`` for EVERY fixed-width stride while staying in
-#: whole-stage codegen (no per-row struct construction).
-_STRIDE_UNIT_US = {
-    **_FIXED_WIDTH_US,
-    "day": 86_400_000_000,
-    "week": 604_800_000_000,
-}
-
 def _stride_width_us(bucket: str) -> int | None:
-    import re
+    """µs width of a fixed-width ``"<n> <unit>s"`` stride, else None.
 
-    m = re.match(r"^(\d+)\s+([a-z]+?)s?$", bucket.strip())
-    if not m:
+    The single-unit date_trunc forms are CALENDAR-aligned (local-tz
+    hour/day boundaries — hence the tz gate below), but Spark's
+    ``window()`` — the path multi-unit strides took before — aligns to
+    the UTC epoch unconditionally, so the integer floor is
+    value-identical to ``window(...).start`` for EVERY fixed-width
+    stride while staying in whole-stage codegen (no per-row struct
+    construction)."""
+    try:
+        return sqltext.interval_us(bucket)
+    except ValueError:
         return None
-    unit = m.group(2)
-    if unit not in _STRIDE_UNIT_US:
-        return None
-    return int(m.group(1)) * _STRIDE_UNIT_US[unit]
 
 
 def _bucket_expr(spark_tz_utc: bool, ts: str, bucket: str) -> Column:
@@ -124,22 +117,7 @@ def sample_by_first_observation(
     ``bucket`` is an interval string: ``"<unit>"`` or ``"<n> <unit>"``
     (``"2 hours"``); anything else raises.
     """
-    parts = bucket.split()
-    if len(parts) not in (1, 2):
-        raise ValueError(
-            f"bucket must be '<unit>' or '<n> <unit>', got {bucket!r}"
-        )
-    qty = int(parts[0]) if len(parts) == 2 else 1
-    unit = parts[-1].rstrip("s")
-    per_unit_us = {
-        "second": 1_000_000,
-        "minute": 60_000_000,
-        "hour": 3_600_000_000,
-        "day": 86_400_000_000,
-    }
-    if unit not in per_unit_us:
-        raise ValueError(f"unsupported first-observation bucket {bucket!r}")
-    width_us = qty * per_unit_us[unit]
+    width_us = _width_us(bucket)
     anchor = df.agg(F.min(ts).alias("__t0"))
     us = F.unix_micros(F.col(ts))
     t0 = F.unix_micros(F.col("__t0"))
@@ -158,22 +136,10 @@ def _width_us(bucket: str) -> int:
     """Micro-second width of a fixed-width bucket spec (``"hour"``,
     ``"15 minutes"``). Calendar units (week/month/…) raise: they have no
     fixed width, so anchored-origin bucketing is undefined for them."""
-    parts = bucket.split()
-    if len(parts) not in (1, 2):
-        raise ValueError(
-            f"bucket must be '<unit>' or '<n> <unit>', got {bucket!r}"
-        )
-    qty = int(parts[0]) if len(parts) == 2 else 1
-    unit = parts[-1].rstrip("s")
-    per_unit_us = {
-        "second": 1_000_000,
-        "minute": 60_000_000,
-        "hour": 3_600_000_000,
-        "day": 86_400_000_000,
-    }
-    if unit not in per_unit_us:
+    n, unit = sqltext.parse_interval(bucket)
+    if unit not in ("second", "minute", "hour", "day"):
         raise ValueError(f"no fixed width for bucket {bucket!r}")
-    return qty * per_unit_us[unit]
+    return n * sqltext.INTERVAL_UNITS[unit]
 
 
 def _parse_utc_us(literal: str) -> int:
@@ -325,7 +291,6 @@ def fill_gaps(
     """
     keys = keys or []
     fill = fill or {}
-    step = step if " " in step else f"1 {step}"
     # Three consumers (bounds, distinct keys, the grid join) would each
     # re-derive the aggregate from its INPUT — 3 scans of the raw table.
     # Materializing the aggregate (bounded: n_buckets × n_keys rows,
@@ -351,7 +316,7 @@ def fill_gaps(
         )
     grid = bounds.select(
         F.explode(
-            F.sequence("__lo", "__hi", F.expr(f"INTERVAL {step}"))
+            F.sequence("__lo", "__hi", F.expr(sqltext.interval(step)))
         ).alias(bucket_col)
     )
     if keys:

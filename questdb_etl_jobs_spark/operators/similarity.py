@@ -19,27 +19,13 @@ expression-based.
 
 from __future__ import annotations
 
-import math
 import random
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from questdb_etl_jobs_spark import sqltext
 from questdb_etl_jobs_spark.functions.vectors import cosine_similarity, dot
-
-
-def _vec_lit(values) -> Column:
-    """array<double> literal as ONE JVM parse (r19, guide §5): the
-    per-element ``F.array(*[F.lit(x) ...])`` spelling costs a py4j round
-    trip per component (~0.1 s per 64-dim probe per build). Values
-    round-trip bit-exactly — ``repr(float)`` is shortest-correct,
-    ``Double.parseDouble`` correctly rounded, and the ``D`` suffix pins
-    DOUBLE (same argument as clustering._centroid_matrix). Non-finite
-    components fall back to the per-element path, which handles them."""
-    vals = [float(x) for x in values]
-    if vals and all(math.isfinite(x) for x in vals):
-        return F.expr("array({})".format(",".join(f"{x!r}D" for x in vals)))
-    return F.array(*[F.lit(x) for x in vals])
 
 
 def cosine_topk(
@@ -54,7 +40,7 @@ def cosine_topk(
     Returns (id_col, cosine) ordered by similarity desc, id asc. The probe
     is a plan literal — broadcast to every task for free.
     """
-    probe_col = _vec_lit(probe)
+    probe_col = F.expr(sqltext.literal([float(x) for x in probe]))
     scored = embeddings.select(
         F.col(id_col),
         cosine_similarity(F.col(vec_col), probe_col).alias("cosine"),
@@ -109,7 +95,7 @@ def add_lsh_signature(
     """
     planes = _hyperplanes(dim, n_planes, seed)
     bits = [
-        F.when(dot(F.col(vec_col), _vec_lit(plane)) >= 0, "1")
+        F.when(dot(F.col(vec_col), F.expr(sqltext.literal(plane))) >= 0, "1")
         .otherwise("0")
         for plane in planes
     ]
@@ -175,7 +161,7 @@ def ivf_assign(centroids: list[list[float]], vec_col: str = "embedding"):
             F.aggregate(
                 F.zip_with(
                     v,
-                    _vec_lit(centroid),
+                    F.expr(sqltext.literal([float(x) for x in centroid])),
                     lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
                 ),
                 F.lit(0.0),

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from questdb_etl_jobs_spark import sqltext
+
 _SALT = "__salt"
 
 
@@ -61,6 +63,6 @@ def salted_join(
     fact_salt = F.pmod(F.xxhash64(*salt_cols), F.lit(salts))
     facts_s = facts.withColumn(_SALT, fact_salt.cast("int"))
     dim_s = dim.withColumn(
-        _SALT, F.explode(F.array(*[F.lit(s) for s in range(salts)]))
+        _SALT, F.explode(F.expr(sqltext.literal(list(range(salts)))))
     )
     return facts_s.join(dim_s, on=[on, _SALT], how=how).drop(_SALT)

@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from questdb_etl_jobs_spark import sqltext
+
 #: Default compression. State ≤ ~2δ centroids; rank error near the
 #: median ~ n/(2δ) and proportionally tighter toward the tails.
 DEFAULT_DELTA = 100
@@ -73,6 +75,11 @@ def _compress(
     order term for term. Bit-identical by construction; the non-integer
     fallback below keeps the original loop for foreign callers.
     """
+    # A zero/negative weight has no digest meaning: it would make the
+    # cumsum non-monotone (breaking the binary search below) and divide a
+    # centroid mean by zero or a negative total.
+    if np.any(weights <= 0):
+        raise ValueError("t-digest weights must be positive")
     order = np.argsort(means, kind="stable")
     means, weights = means[order], weights[order]
     n = len(means)
@@ -81,12 +88,6 @@ def _compress(
         n
         and float(C[-1]) < 2.0**53
         and np.all(weights == np.floor(weights))
-        # Positive weights only (r18 ADVICE): a zero/negative integer
-        # weight makes the cumsum non-monotone, breaking the binary
-        # search's monotone-predicate assumption AND the
-        # C[-1]-bounds-all-prefixes exactness argument — route such
-        # inputs to the reference loop instead of silently diverging.
-        and np.all(weights > 0)
     ):
         return _compress_seq(means, weights, delta)
     total = float(C[-1])
@@ -224,7 +225,9 @@ def tdigest_quantile_expr(q: float):
     clamping to the extreme centroid means at the tails.
     """
     # cumulative weights via aggregate-with-accumulator: positions array
-    target = f"({q!r} * aggregate(weights, 0.0d, (a, x) -> a + x))"
+    target = (
+        f"({sqltext.literal(q)} * aggregate(weights, 0.0d, (a, x) -> a + x))"
+    )
     # midpoint ranks: cum_i - w_i/2 for each i, computed by zipping the
     # running sum. transform with index needs the prefix sum; build it
     # as slice-aggregate (O(c^2) over c<=2*delta sketch entries - cheap,
@@ -233,8 +236,7 @@ def tdigest_quantile_expr(q: float):
         "transform(weights, (w, i) -> "
         "aggregate(slice(weights, 1, i + 1), 0.0d, (a, x) -> a + x) - w / 2.0d)"
     )
-    return F.expr(
-        f"""
+    sql = f"""
         CASE
           WHEN {target} <= element_at({mid}, 1)
             THEN element_at(means, 1)
@@ -260,7 +262,7 @@ def tdigest_quantile_expr(q: float):
           )
         END
         """
-    )
+    return F.expr(sql)
 
 
 def tdigest_quantiles(

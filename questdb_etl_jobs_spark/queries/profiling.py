@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from questdb_etl_jobs_spark import sqltext
 from questdb_etl_jobs_spark.operators.scd import pit_join, scd2_intervals
 from questdb_etl_jobs_spark.queries import dq
 from questdb_etl_jobs_spark.queries._protocol import avg4, sum4
@@ -1140,7 +1141,7 @@ GROUP BY d.day ORDER BY d.day
 @dq("q130_rolling_distinct_hll", oracle=_Q130_ORACLE, covers="A3,A7,F5,EXT")
 def q130(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    offsets = F.array(*[F.lit(i) for i in range(7)])
+    offsets = F.expr(sqltext.literal(list(range(7))))
     # Sketch path: one partial per day, window = union of 7 partials.
     daily_sk = events.groupBy(F.to_date("ts").alias("day")).agg(
         F.hll_sketch_agg("user_id", F.lit(14)).alias("sk")

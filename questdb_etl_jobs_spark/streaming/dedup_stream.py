@@ -31,6 +31,7 @@ shingles) so no admitted document is ever re-shingled.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -99,12 +100,15 @@ def admit_batch(
 
     # 2. Cross-check against the admitted index: batch side is small →
     #    broadcast its bands; the index streams through map-side.
+    #    No index yet (first batch) is the only error that means "admit
+    #    against nothing"; an unreadable index must not let duplicates in.
     try:
         index = spark.read.parquet(index_path)
-        have_index = True
-    except Exception:
-        have_index = False
-    if have_index:
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        index = None
+    if index is not None:
         both = survivors.select(id_col, "signature").unionByName(
             index.select(id_col, "signature")
         )

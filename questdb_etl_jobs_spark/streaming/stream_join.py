@@ -21,6 +21,8 @@ import datetime as _dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from questdb_etl_jobs_spark import sqltext
+
 
 def interval_stream_join(
     left: DataFrame,
@@ -69,8 +71,8 @@ def interval_stream_join(
     conds = [lw[c] == rw[c] for c in on]
     conds.append(
         lw[left_ts].between(
-            rw[right_ts] - F.expr(f"INTERVAL {tolerance}"),
-            rw[right_ts] + F.expr(f"INTERVAL {tolerance}"),
+            rw[right_ts] - F.expr(sqltext.interval(tolerance)),
+            rw[right_ts] + F.expr(sqltext.interval(tolerance)),
         )
     )
     cond = conds[0]
@@ -130,7 +132,7 @@ def asof_stream_join(
     lw = left.withWatermark(left_ts, watermark)
     rw = right.withWatermark(right_ts, watermark)
     cond = (rw[right_ts] <= lw[left_ts]) & (
-        rw[right_ts] >= lw[left_ts] - F.expr(f"INTERVAL {tolerance}")
+        rw[right_ts] >= lw[left_ts] - F.expr(sqltext.interval(tolerance))
     )
     for c in on:
         cond = cond & (lw[c] == rw[c])

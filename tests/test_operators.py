@@ -501,6 +501,38 @@ def test_text_profile_ansi_edge_cases(spark):
     assert rows[4]["lang_guess"] == "en" and rows[4]["n_tokens"] == 4
 
 
+def test_text_metric_functions_equal_text_profile(spark):
+    """The public metric functions and text_profile share one formula
+    each: same values on every row, edge cases included."""
+    from questdb_etl_jobs_spark.functions.text import (
+        avg_token_length,
+        lang_guess,
+        punct_ratio,
+        quality_score,
+        stopword_ratio,
+        text_profile,
+    )
+
+    df = spark.createDataFrame(
+        [(1, ""), (2, " "), (3, "!!!"), (4, "the quick brown fox"),
+         (5, "der die das und, nicht? ein mit von los las"), (6, None)],
+        "doc_id long, text string",
+    )
+    singles = df.select(
+        "doc_id",
+        punct_ratio("text").alias("punct_ratio"),
+        stopword_ratio("text").alias("stop_ratio"),
+        avg_token_length("text").alias("avg_tok_len"),
+        quality_score("text").alias("quality"),
+        lang_guess("text").alias("lang_guess"),
+    )
+    cols = ["doc_id", "punct_ratio", "stop_ratio", "avg_tok_len", "quality",
+            "lang_guess"]
+    got = sorted(tuple(r) for r in singles.collect())
+    want = sorted(tuple(r) for r in text_profile(df, "text").select(*cols).collect())
+    assert got == want
+
+
 # ---------------------------------------------------------------------------
 # Skew mitigation
 # ---------------------------------------------------------------------------
@@ -656,6 +688,15 @@ def test_dup_clusters_transitive_chain(spark):
         for r in dup_clusters(edges, "a", "b").collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 7: 1, 10: 10, 11: 10}
+
+
+def test_dup_clusters_rejects_max_iter_below_one(spark):
+    from questdb_etl_jobs_spark.operators.dedup import dup_clusters
+
+    edges = spark.createDataFrame([(2, 1)], "a long, b long")
+    for max_iter in (0, -1):
+        with pytest.raises(ValueError, match="max_iter"):
+            dup_clusters(edges, "a", "b", max_iter=max_iter)
 
 
 def test_dup_clusters_deep_chain_dup_edges_vs_union_find(spark):
@@ -2661,16 +2702,21 @@ def test_tdigest_compress_vectorized_matches_reference():
     m_fast, w_fast = _compress(means.copy(), weights.copy(), 100)
     m_ref, w_ref = _compress_seq(means[order], weights[order], 100)
     assert np.all(m_fast == m_ref) and np.all(w_fast == w_ref)
-    # Zero/negative integer weights (r19, round-18 ADVICE): a
-    # non-monotone cumsum would break the vectorized binary search's
-    # assumptions — such inputs must route to the reference pass too.
-    means = rng.normal(0, 1, 60)
-    weights = rng.integers(-3, 4, 60).astype(np.float64)  # includes <= 0
-    assert (weights <= 0).any()
-    order = np.argsort(means, kind="stable")
-    m_fast, w_fast = _compress(means.copy(), weights.copy(), 100)
-    m_ref, w_ref = _compress_seq(means[order], weights[order], 100)
-    assert np.all(m_fast == m_ref) and np.all(w_fast == w_ref)
+
+
+@pytest.mark.parametrize("bad", [0.0, -1.0, -0.5])
+def test_tdigest_compress_rejects_non_positive_weights(bad):
+    """A zero/negative weight would divide a centroid mean by a zero or
+    negative total (inf/NaN centroids) — on both the vectorized and the
+    reference path."""
+    import numpy as np
+
+    from questdb_etl_jobs_spark.operators.tdigest import _compress
+
+    means = np.array([1.0, 2.0, 3.0])
+    for weights in (np.array([1.0, bad, 1.0]), np.array([0.5, bad, 1.5])):
+        with pytest.raises(ValueError, match="positive"):
+            _compress(means, weights, 100)
 
 
 def test_tdigest_bounded_state_and_accuracy(spark):

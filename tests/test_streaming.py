@@ -272,68 +272,6 @@ def test_stateful_running_totals_matches_batch(spark, tmp_path):
     assert got == expected
 
 
-def test_transform_with_state_matches_batch(spark, tmp_path):
-    # The transformWithStateInPandas twin (Spark 4.1 StatefulProcessor,
-    # named ValueState) must agree with the same batch groupBy — and
-    # with the applyInPandasWithState form it supersedes. The state
-    # protocol of this API needs google.protobuf, which this sandbox
-    # lacks — env-gated like the JDBC sink (COVERAGE.md S4).
-    pytest.importorskip(
-        "google.protobuf",
-        reason="DECISION (transform_state.py docstring, COVERAGE.md R7): "
-        "transformWithState's state protocol needs the google.protobuf "
-        "RUNTIME, absent in this sandbox; vendoring a stub was evaluated "
-        "and rejected. applyInPandasWithState is the executed twin.",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    from questdb_etl_jobs_spark.pipeline import anonymize_and_cast
-    from questdb_etl_jobs_spark.sources.csv_source import read_purchases_csv
-    from questdb_etl_jobs_spark.streaming.file_stream import stream_purchases_csv
-    from questdb_etl_jobs_spark.streaming.transform_state import (
-        running_user_totals_tws,
-    )
-
-    stream = stream_purchases_csv(spark, str(FIXTURES / "purchases"))
-    totals = running_user_totals_tws(anonymize_and_cast(stream))
-    q = (
-        totals.writeStream.format("memory")
-        .queryName("tws_totals_test")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["buyer"]: (r["n_purchases"], r["total_spend"])
-        for r in spark.sql(
-            """
-            SELECT buyer, n_purchases, total_spend
-            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY buyer
-                          ORDER BY n_purchases DESC) rn
-                  FROM tws_totals_test) WHERE rn = 1
-            """
-        ).collect()
-    }
-    batch = anonymize_and_cast(
-        read_purchases_csv(spark, str(FIXTURES / "purchases"))
-    )
-    expected = {
-        r["buyer"]: (r["n"], r["total"])
-        for r in batch.groupBy("buyer")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("price").cast("long")).alias("total"),
-        )
-        .collect()
-    }
-    assert got == expected
-
-
 def test_hourly_rollup_maintenance(spark, tmp_path):
     # Hypertable-style continuous aggregate: streaming maintenance with
     # per-batch dynamic partition overwrite must converge to the batch
@@ -1477,6 +1415,24 @@ def test_maintain_dedup_corpus_admits_only_novel(spark, tmp_path):
     assert len(row.signature) == 32 and len(row["__sh"]) > 0
     # Admitted text survives untouched in the corpus.
     assert corpus.filter("doc_id = 1").head().text == base
+
+
+def test_admit_batch_unreadable_index_raises(spark, tmp_path):
+    """Only a missing index means "nothing admitted yet": an index path
+    that exists but is not readable parquet must fail the batch instead
+    of admitting every document unchecked."""
+    from questdb_etl_jobs_spark.streaming.dedup_stream import admit_batch
+
+    index = tmp_path / "index"
+    index.mkdir()
+    (index / "part-0.parquet").write_text("not a parquet file\n")
+    batch = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "epsilon zeta eta theta")],
+        "doc_id bigint, text string",
+    )
+    with pytest.raises(Exception, match="(?i)parquet"):
+        admit_batch(spark, batch, str(tmp_path / "corpus"), str(index))
+    assert not (tmp_path / "corpus").exists()
 
 
 def test_replay_settled_drains_left_outer_null_tail(spark, tmp_path):

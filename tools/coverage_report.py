@@ -45,11 +45,20 @@ IDS: list[tuple[str, str]] = [
     ("R1", "File-arrival streaming source"), ("R2", "Tumbling window"),
     ("R3", "Sliding/session windows"), ("R4", "Watermark/lateness"),
     ("R5", "Stateful dedup"), ("R6", "foreachBatch quarantine sink"),
-    ("R7", "transformWithStateInPandas"),
     ("U1", "Scalar transform (built-ins)"), ("U2", "Grouped-map pandas"),
     ("U3", "UDAF"), ("U4", "UDTF (explode)"),
     ("EXT", "LLM-pipeline composites"),
 ]
+
+#: Ids dropped from the surface, and the decision.
+REMOVED: dict[str, str] = {
+    "R7": "transformWithStateInPandas — DECISION: removed with "
+          "streaming/transform_state.py. Its state protocol needs the "
+          "google.protobuf runtime, which the engine's environment does "
+          "not ship, so it could never run; applyInPandasWithState "
+          "(streaming/stateful.py, R5/R6 queries) is the executed "
+          "stateful operator",
+}
 
 #: Ids with no registry query, and why (verified elsewhere).
 NO_QUERY: dict[str, str] = {
@@ -58,11 +67,6 @@ NO_QUERY: dict[str, str] = {
           "equality (tests/test_sinks.py); the ILP twin (sources/ilp.py) "
           "is golden-tested against a loopback server; only PG-wire "
           "dialect specifics remain env-blocked",
-    "R7": "env-blocked, DECISION committed (streaming/transform_state.py "
-          "docstring): the state protocol needs the google.protobuf "
-          "runtime, absent here; vendoring a stub = reimplementing "
-          "protobuf, rejected. applyInPandasWithState "
-          "(streaming/stateful.py) is the executed twin",
     "P5": "driver-side contract (invalid event → batch skipped); "
           "run_batch early-exit tests in tests/test_pipeline.py",
     "R3": "streaming faces in tests (session/sliding stream == batch); "
@@ -123,6 +127,8 @@ def main() -> None:
             f"documented exceptions: "
             f"{sum(1 for i, _ in IDS if i not in by_id and i in NO_QUERY)};"
             f" unexplained: {len(missing)} {missing if missing else ''}", ""]
+    out += ["Removed ids:", ""]
+    out += [f"- {op_id}: {why}" for op_id, why in REMOVED.items()] + [""]
     with open("/root/repo/COVERAGE.md", "w") as fh:
         fh.write("\n".join(out))
     print(f"wrote COVERAGE.md ({len(IDS)} ids, unexplained={len(missing)})")
