@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from questdb_etl_jobs_spark.sources.fs import hadoop_fs
 from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists as _view_exists
 
 _PDATE = "__vdate"
@@ -124,12 +125,19 @@ def refresh_sample_by_view(
         touched.unionByName(fresh), keys
     ).withColumn(_PDATE, F.to_date("bucket_ts"))
     materialized = merged.localCheckpoint(eager=True)
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        materialized.write.partitionBy(_PDATE).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+    _overwrite_days(materialized, path)
+
+
+def _overwrite_days(materialized: DataFrame, path: str) -> None:
+    """Replace exactly the view's date partitions present in
+    ``materialized`` (dynamic overwrite as a per-write option: the
+    session conf is shared by every thread of the session)."""
+    (
+        materialized.write.partitionBy(_PDATE)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
 
 
 def read_sample_by_view(spark: SparkSession, path: str) -> DataFrame:
@@ -160,19 +168,13 @@ _COMPACTION_LOG = "_compaction_log.json"
 _COMPACTION_LOCK = "_compaction.lock"
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
 def _committed_batch_dirs(spark: SparkSession, staged: str) -> dict[int, str]:
     """``batch_id -> dir`` for staged batch dirs whose write COMMITTED
     (the ``_SUCCESS`` marker Spark's committer drops at job commit). A
     dir a concurrent writer is mid-writing has no marker yet —
     ``mode("overwrite")`` removes the old dir first — so it is invisible
     to compaction and recompute until its job commits."""
-    jvm, fs = _hadoop_fs(spark, staged)
+    jvm, fs = spark._jvm, hadoop_fs(spark, staged)
     out: dict[int, str] = {}
     for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(staged)):
         name = st.getPath().getName()
@@ -242,7 +244,7 @@ def _read_compaction_log_versioned(
     misread every logged fold dir as unclaimed and drop its content.
     A lister racing the rename may briefly see n only; that staleness
     is exactly what the caller's stable-snapshot loop detects."""
-    jvm, fs = _hadoop_fs(spark, staged)
+    jvm, fs = spark._jvm, hadoop_fs(spark, staged)
     last_err: Exception | None = None
     for _ in range(5):
         versions = _log_versions(jvm, fs, staged)
@@ -284,7 +286,7 @@ def _write_compaction_log(
     version is committed."""
     import json
 
-    jvm, fs = _hadoop_fs(spark, staged)
+    jvm, fs = spark._jvm, hadoop_fs(spark, staged)
     prior = _log_versions(jvm, fs, staged)
     next_ver = (prior[-1][0] + 1) if prior else 1
     tmp = jvm.org.apache.hadoop.fs.Path(
@@ -351,7 +353,7 @@ def _acquire_compaction_lease(
     IO/RPC error is an error, not "lock held"."""
     import uuid
 
-    jvm, fs = _hadoop_fs(spark, staged)
+    jvm, fs = spark._jvm, hadoop_fs(spark, staged)
     lock = jvm.org.apache.hadoop.fs.Path(f"{staged}/{_COMPACTION_LOCK}")
     token = uuid.uuid4().hex
     for _ in range(3):
@@ -405,7 +407,7 @@ def _renew_compaction_lease(
     original staged dirs remain authoritative throughout)."""
     import time
 
-    jvm, fs = _hadoop_fs(spark, staged)
+    jvm, fs = spark._jvm, hadoop_fs(spark, staged)
     current = _lock_token(jvm, fs, staged)
     if current != token:
         raise RuntimeError(
@@ -439,7 +441,7 @@ def _release_compaction_lease(
     and the displaced holder's next ``_renew_compaction_lease`` aborts
     its protocol before any destructive step, the fail-safe direction.
     """
-    jvm, fs = _hadoop_fs(spark, staged)
+    jvm, fs = spark._jvm, hadoop_fs(spark, staged)
     lock = jvm.org.apache.hadoop.fs.Path(f"{staged}/{_COMPACTION_LOCK}")
     if token is None:
         fs.delete(lock, False)
@@ -607,12 +609,7 @@ def refresh_sample_by_view_exactly_once(
             f"could not obtain a stable staged snapshot of {staged} "
             "after 8 attempts (compactions kept landing mid-resolve)"
         ) from last_err
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        materialized.write.partitionBy(_PDATE).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+    _overwrite_days(materialized, path)
 
 
 def compact_staged_batches(
@@ -679,7 +676,7 @@ def compact_staged_batches(
         return False
     crashed = False
     try:
-        jvm, fs = _hadoop_fs(spark, staged)
+        jvm, fs = spark._jvm, hadoop_fs(spark, staged)
         log = _read_compaction_log(spark, staged)
         committed = _committed_batch_dirs(spark, staged)
         superseded_ever = {b for e in log for b in e["superseded"]}

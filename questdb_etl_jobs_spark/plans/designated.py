@@ -15,14 +15,35 @@ Catalyst rules:
 
 At 100 TB this is the difference between scanning a day and scanning the
 table: time filters become directory listings.
+
+The layout is the catalog, so every reader and writer must agree on it.
+Two rules keep them agreeing:
+
+- every read of the table's rows opens through :func:`_open`, which
+  returns the one face all readers see: merged through pending
+  merge-on-read deltas (``.updates/``), else the declared schema with
+  renames applied when a sidecar (``_qdb_table_meta.json``) exists, else
+  the plain footer read (the catalog faces :func:`show_partitions` and
+  :func:`show_columns` read the layout and footers themselves);
+- every write of table files goes through :func:`_write_layout`, which
+  owns the declared-to-stored name translation, the ``(<col>_pdate, ts)``
+  sort, ``partitionBy(<col>_pdate)`` and the write scope (append,
+  compaction, or dynamic partition overwrite).
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from questdb_etl_jobs_spark.sources.fs import (
+    hadoop_fs,
+    hadoop_path_exists,
+    no_table_files,
+)
 
 PARTITION_SUFFIX = "_pdate"
 
@@ -58,9 +79,8 @@ def write_table_meta(
     import json
 
     jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(hpath)
+    fs = hadoop_fs(spark, path)
+    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(path))
     tmp = jvm.org.apache.hadoop.fs.Path(f"{path}/{TABLE_META_FILE}.tmp")
     final = jvm.org.apache.hadoop.fs.Path(f"{path}/{TABLE_META_FILE}")
     cols_payload = []
@@ -99,7 +119,7 @@ def read_table_meta(spark: SparkSession, path: str) -> dict | None:
 
     jvm = spark._jvm
     meta = jvm.org.apache.hadoop.fs.Path(f"{path}/{TABLE_META_FILE}")
-    fs = meta.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs = hadoop_fs(spark, path)
     if not fs.exists(meta):
         return None
     reader = jvm.java.io.BufferedReader(
@@ -176,6 +196,117 @@ def to_stored_names(df: DataFrame, meta: dict | None) -> DataFrame:
     )
 
 
+def _open(
+    spark: SparkSession,
+    path: str,
+    ts_col: str | None = None,
+    file_format: str = "parquet",
+    identity: bool = False,
+) -> tuple[DataFrame, dict | None]:
+    """Open a designated-ts table: ``(face, sidecar or None)``, where the
+    face — partition column included — is the one every reader sees:
+
+    - committed merge-on-read deltas pending: the MERGED face, base rows
+      not superseded plus the latest version of every updated row (a
+      plain read would silently return stale base rows until VACUUM
+      folds the deltas). Partitions bearing no delta pass through with
+      no join, and the tombstone side broadcasts only within the
+      measured caps (:func:`_tombstone_ids`);
+    - else a declared-schema sidecar: :func:`read_declared` — declared
+      names, NULLs for columns added after a file was written, columns
+      even when the table has no rows;
+    - else the plain footer read.
+
+    Sidecars and deltas are parquet conventions; any other
+    ``file_format`` is a plain read. ``ts_col`` defaults to the
+    sidecar's designated column, else the layout's
+    (:func:`infer_designated_ts`); a table marking neither reads
+    without its deltas. ``identity=True`` adds the file-source row
+    identity to EVERY row (delta rows carry their origin's, so a second
+    UPDATE over an updated row supersedes by the same key) — the face a
+    merge-on-read UPDATE keys its deltas by."""
+    if file_format != "parquet":
+        return spark.read.format(file_format).load(path), None
+    meta = read_table_meta(spark, path)
+    seqs = pending_update_seqs(spark, path)
+    if meta is not None:
+        base = read_declared(spark, path, meta)
+    else:
+        base = spark.read.parquet(path)
+    if not (seqs or identity):
+        return base, meta
+    ts_col = ts_col or (
+        meta["designated"] if meta is not None
+        else infer_designated_ts(base.columns)
+    )
+    if ts_col is None:
+        return base, meta
+    pcol = ts_col + PARTITION_SUFFIX
+    ided = _with_identity(base, pcol)
+    if not seqs:
+        return ided, meta
+    latest = _deltas_latest(spark, path, seqs, meta, pcol)
+    delta_dates = [
+        r[0] for r in latest.select(pcol).distinct().collect()
+    ]
+    untouched = (ided if identity else base).filter(
+        ~F.col(pcol).isin(delta_dates)
+    )
+    masked = ided.filter(F.col(pcol).isin(delta_dates)).join(
+        _tombstone_ids(latest), [_ID_FILE, _ID_POS], "left_anti"
+    )
+    if not identity:
+        masked = masked.drop(_ID_FILE, _ID_POS)
+        latest = latest.drop(_ID_FILE, _ID_POS)
+    return untouched.unionByName(masked).unionByName(latest), meta
+
+
+def _write_layout(
+    df: DataFrame,
+    path: str,
+    ts_col: str,
+    meta: dict | None,
+    mode: str = "append",
+    file_format: str = "parquet",
+) -> None:
+    """Land ``df`` — declared column space, partition column included —
+    in the designated layout at ``path``: declared names translate to
+    stored names (:func:`to_stored_names`), rows sort by ``(pcol, ts)``
+    within each task, and directories split by ``pcol``. ``mode`` is
+    the write scope:
+
+    - a DataFrameWriter save mode (``append``, …): as given;
+    - ``"compact"``: one shuffle hashed on ``pcol`` — every directory's
+      rows converge on one task, so each is written as exactly one
+      file — into a path that must not exist yet;
+    - ``"partitions"``: dynamic partition overwrite — only the days
+      present in ``df`` are replaced. It is a per-write option, never
+      the session conf, which every thread of the session shares."""
+    pcol = ts_col + PARTITION_SUFFIX
+    df = to_stored_names(df, meta)
+    if mode == "compact":
+        df = df.repartition(F.col(pcol))
+    # Sort key MUST lead with the partition column: FileFormatWriter
+    # requires task rows ordered by partition columns and injects its own
+    # (ts-order-destroying) sort when the incoming ordering doesn't
+    # already satisfy that prefix. (pcol, ts) satisfies it AND yields
+    # time-ordered files.
+    writer = (
+        df.sortWithinPartitions(pcol, ts_col)
+        .write.partitionBy(pcol)
+        .format(file_format)
+    )
+    if mode == "compact":
+        writer = writer.mode("error")
+    elif mode == "partitions":
+        writer = writer.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        )
+    else:
+        writer = writer.mode(mode)
+    writer.save(path)
+
+
 def write_designated_ts(
     df: DataFrame,
     path: str,
@@ -203,23 +334,18 @@ def write_designated_ts(
     out continuously as successive ingests advance the newest
     partition, matching QuestDB's lifecycle rather than a one-shot
     statement-time enforcement.
+
+    ``df`` is in declared column space: on a table whose sidecar
+    records renamed columns, the rows land under their stored names.
     """
     pcol = ts_col + PARTITION_SUFFIX
-    # Sort key MUST lead with the partition column: FileFormatWriter
-    # requires task rows ordered by partition columns and injects its own
-    # (ts-order-destroying) sort when the incoming ordering doesn't
-    # already satisfy that prefix. (pcol, ts) satisfies it AND yields
-    # time-ordered files.
-    (
-        df.withColumn(pcol, F.to_date(F.col(ts_col)))
-        .sortWithinPartitions(pcol, ts_col)
-        .write.mode(mode)
-        .partitionBy(pcol)
-        .format(file_format)
-        .save(path)
+    spark = df.sparkSession
+    meta = read_table_meta(spark, path) if file_format == "parquet" else None
+    _write_layout(
+        df.withColumn(pcol, F.to_date(F.col(ts_col))),
+        path, ts_col, meta, mode, file_format,
     )
     if ttl_days is not None:
-        spark = df.sparkSession
         existing = list_partitions(spark, path, ts_col)
         if existing:
             enforce_ttl(spark, path, ts_col, ttl_days, existing[-1])
@@ -265,20 +391,8 @@ def register_designated_table(
     A table with pending merge-on-read deltas (``.updates/``) registers
     as its MERGED face automatically — a plain read of a delta-bearing
     table would silently return stale base rows, so every read path
-    resolves through the deltas until VACUUM folds them."""
-    meta = read_table_meta(spark, path)
-    if file_format == "parquet" and pending_update_seqs(spark, path):
-        ts = (meta or {}).get("designated") or infer_designated_ts(
-            spark.read.parquet(path).columns
-        )
-        if ts is not None:
-            df = read_designated_merged(spark, path, ts)
-            df.createOrReplaceTempView(name)
-            return df
-    if meta is not None and file_format == "parquet":
-        df = read_declared(spark, path, meta)
-    else:
-        df = spark.read.format(file_format).load(path)
+    resolves through the deltas until VACUUM folds them (:func:`_open`)."""
+    df, _ = _open(spark, path, file_format=file_format)
     df.createOrReplaceTempView(name)
     return df
 
@@ -306,18 +420,20 @@ def compact_designated(
     overwrite a path it is reading; callers atomically swap directories,
     or run per-partition with dynamic partition overwrite for a live
     table).
+
+    The source is read through :func:`_open` and its sidecar is copied,
+    so the output is the SAME table, compacted: pending merge-on-read
+    deltas are folded in, a declared table keeps its declaration
+    (columns added after early files were written survive) and its
+    stored names.
     """
-    pcol = ts_col + PARTITION_SUFFIX
-    df = spark.read.parquet(src_path)
-    (
-        df.repartition(F.col(pcol))
-        # Leading pcol keeps the writer from injecting its own sort
-        # (see write_designated_ts).
-        .sortWithinPartitions(pcol, ts_col)
-        .write.mode("error")
-        .partitionBy(pcol)
-        .parquet(dst_path)
-    )
+    df, meta = _open(spark, src_path, ts_col)
+    _write_layout(df, dst_path, ts_col, meta, "compact")
+    if meta is not None:
+        write_table_meta(
+            spark, dst_path, meta_column_tuples(meta), meta["designated"],
+            dedup_keys=meta.get("dedup_keys"),
+        )
 
 
 def update_from_designated_ts(
@@ -351,29 +467,8 @@ def update_from_designated_ts(
     rewritten."""
     assert_no_pending_updates(spark, path, "UPDATE ... FROM")
     pcol = ts_col + PARTITION_SUFFIX
-    meta = read_table_meta(spark, path)
-    if meta is not None:
-        existing = read_declared(spark, path, meta)
-        declared_types = {
-            c["name"]: c["spark_type"] for c in meta["columns"]
-        }
-    else:
-        existing = spark.read.parquet(path)
-        declared_types = {
-            f.name: f.dataType.simpleString() for f in existing.schema.fields
-        }
-    for col, _ in assignments:
-        if col == ts_col:
-            raise ValueError(
-                f"UPDATE cannot assign the designated timestamp "
-                f"{ts_col!r} (QuestDB refuses; it also keys the "
-                "partition layout here)"
-            )
-        if col not in declared_types or col == pcol:
-            raise ValueError(
-                f"UPDATE target column {col!r} does not exist "
-                f"(columns: {[c for c in existing.columns if c != pcol]})"
-            )
+    existing, meta = _open(spark, path, ts_col)
+    declared_types = _assignable_types(existing, meta, ts_col, assignments)
     target_cols = [c for c in existing.columns if c != pcol]
     tgt = existing.alias(target_alias)
     # The source carries a match marker so the LEFT JOIN can
@@ -430,21 +525,41 @@ def update_from_designated_ts(
             "target row(s) match more than one source row — "
             "deduplicate the source on the join key first"
         )
-    materialized = to_stored_names(ck.drop("__qdb_rid"), meta)
-    saved = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "STATIC"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            materialized.sortWithinPartitions(pcol, ts_col)
-            .write.mode("overwrite")
-            .partitionBy(pcol)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+    _write_layout(ck.drop("__qdb_rid"), path, ts_col, meta, "partitions")
     return sorted(str(d) for d in dates)
+
+
+def _assignable_types(
+    df: DataFrame,
+    meta: dict | None,
+    ts_col: str,
+    assignments: list[tuple[str, str]],
+) -> dict[str, str]:
+    """Declared type of every column of the opened face ``df`` — the
+    cast target of an assigned value — after refusing an UPDATE that
+    assigns the designated timestamp or a column the table lacks."""
+    pcol = ts_col + PARTITION_SUFFIX
+    if meta is not None:
+        types = {c["name"]: c["spark_type"] for c in meta["columns"]}
+    else:
+        types = {
+            f.name: f.dataType.simpleString()
+            for f in df.schema.fields
+            if f.name not in (pcol, _ID_FILE, _ID_POS)
+        }
+    for col, _ in assignments:
+        if col == ts_col:
+            raise ValueError(
+                f"UPDATE cannot assign the designated timestamp "
+                f"{ts_col!r} (QuestDB refuses; it also keys the "
+                "partition layout here)"
+            )
+        if col not in types:
+            raise ValueError(
+                f"UPDATE target column {col!r} does not exist "
+                f"(columns: {list(types)})"
+            )
+    return types
 
 
 def _swap_in_place(spark, path: str, tmp_suffix: str = ".__vacuum"):
@@ -470,7 +585,7 @@ def _swap_in_place(spark, path: str, tmp_suffix: str = ".__vacuum"):
     ``tests/test_dialect.py::test_swap_gap_recovery_contract``."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs = hadoop_fs(spark, path)
     tmp = jvm.org.apache.hadoop.fs.Path(path + tmp_suffix)
     old = jvm.org.apache.hadoop.fs.Path(path + ".__old")
     for leftover in (tmp, old):
@@ -561,7 +676,6 @@ def alter_column_type(
             "ATTACH — attach or drop them first"
         )
     dates = list_partitions(spark, path, ts_col)
-    pcol = ts_col + PARTITION_SUFFIX
     tmp, commit = _swap_in_place(spark, path, tmp_suffix=".__retype")
     new_cols = [
         (n, new_spark_type if n == col else st, new_qdb_type
@@ -569,16 +683,10 @@ def alter_column_type(
         for n, st, qt, stored in meta_column_tuples(meta)
     ]
     if dates:
-        df = read_declared(spark, path, meta).withColumn(
-            col, F.col(col).cast(new_spark_type)
-        )
-        (
-            to_stored_names(df, meta)
-            .repartition(F.col(pcol))
-            .sortWithinPartitions(pcol, ts_col)
-            .write.mode("error")
-            .partitionBy(pcol)
-            .parquet(tmp)
+        df, _ = _open(spark, path, ts_col)
+        _write_layout(
+            df.withColumn(col, F.col(col).cast(new_spark_type)),
+            tmp, ts_col, meta, "compact",
         )
     write_table_meta(
         spark, tmp, new_cols, ts_col, dedup_keys=meta.get("dedup_keys")
@@ -601,8 +709,10 @@ def vacuum_designated(
 
     Sequence: :func:`compact_designated` rewrites into a temp sibling
     (``<path>.__vacuum``) — the read is entirely consumed before any
-    swap, so Spark never overwrites what it is reading — then the
-    declared-schema sidecar is copied in, the live directory moves to
+    swap, so Spark never overwrites what it is reading; it reads through
+    the merged face, so pending merge-on-read deltas fold into the
+    compacted tree and ``.updates/`` dies with the old one, and it
+    copies the declared-schema sidecar — then the live directory moves to
     ``<path>.__old``, the compacted one takes its place, detached
     partitions (``.detached/``, invisible to the compaction read) are
     carried over, and the old tree is deleted. Single-writer by
@@ -611,55 +721,11 @@ def vacuum_designated(
     recovery is one rename back, and the temp names make the state
     obvious. Returns the partition dates compacted (``[]`` for an
     empty table — nothing to vacuum)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     dates = list_partitions(spark, path, ts_col)
     if not dates:
         return []
     tmp, commit = _swap_in_place(spark, path, tmp_suffix=".__vacuum")
-    meta = read_table_meta(spark, path)
-    pcol = ts_col + PARTITION_SUFFIX
-    if pending_update_seqs(spark, path):
-        # Merge-on-read fold: compact THROUGH the delta face, so the
-        # vacuumed tree holds the post-update rows and the .updates
-        # sidecar dies with the old tree — VACUUM is the compaction
-        # the MoR face defers to (QuestDB's column-version reclaim,
-        # same statement).
-        df = to_stored_names(
-            read_designated_merged(spark, path, ts_col), meta
-        )
-        (
-            df.repartition(F.col(pcol))
-            .sortWithinPartitions(pcol, ts_col)
-            .write.mode("error")
-            .partitionBy(pcol)
-            .parquet(tmp)
-        )
-    elif meta is not None:
-        # Declared table: compact through the DECLARED schema, not
-        # footer inference — a column ADDed after early files were
-        # written is absent from those footers, and an inference that
-        # sampled an old footer would silently drop it from the
-        # compacted output. Stored names land back in the files.
-        df = to_stored_names(read_declared(spark, path, meta), meta)
-        (
-            df.repartition(F.col(pcol))
-            .sortWithinPartitions(pcol, ts_col)
-            .write.mode("error")
-            .partitionBy(pcol)
-            .parquet(tmp)
-        )
-    else:
-        compact_designated(spark, path, tmp, ts_col)
-    meta_src = jvm.org.apache.hadoop.fs.Path(f"{path}/{TABLE_META_FILE}")
-    if fs.exists(meta_src):
-        futil = jvm.org.apache.hadoop.fs.FileUtil
-        futil.copy(
-            fs, meta_src,
-            fs, jvm.org.apache.hadoop.fs.Path(f"{tmp}/{TABLE_META_FILE}"),
-            False, spark._jsc.hadoopConfiguration(),
-        )
+    compact_designated(spark, path, tmp, ts_col)
     commit(carry_detached=True)
     return dates
 
@@ -677,9 +743,11 @@ def read_designated_ts(
     ``start``/``end`` bound ``ts_col`` (half-open ``[start, end)``). The
     equivalent date predicate on the partition column is added so pruning
     is static (visible as ``PartitionFilters`` in the physical plan).
+    The table opens through :func:`_open`: pending merge-on-read deltas
+    and a declared schema's renames apply, as for every other reader.
     """
     pcol = ts_col + PARTITION_SUFFIX
-    df = spark.read.format(file_format).load(path)
+    df, _ = _open(spark, path, ts_col, file_format)
     if start is not None:
         df = df.filter(
             (F.col(ts_col) >= F.lit(start))
@@ -740,28 +808,20 @@ def upsert_designated_ts(
     assert_no_pending_updates(spark, path, "DEDUP upsert")
     pcol = ts_col + PARTITION_SUFFIX
     batchd = batch.withColumn(pcol, F.to_date(F.col(ts_col)))
-
-    def dedup_batch(b: DataFrame) -> DataFrame:
-        return dedup_within_batch(b, ts_col, keys)
-
-    from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
-
     if not hadoop_path_exists(spark, path):
         # First write: no table yet. Only a provably-absent path takes
         # the initialize branch — a transient storage error or corrupt
         # footer on an EXISTING table must raise, never be mistaken for
         # first-write (that would drop the history on the next step's
         # dynamic overwrite).
-        return write_designated_ts(dedup_batch(batch), path, ts_col)
-    meta = read_table_meta(spark, path)
-    if meta is not None:
-        # Declared-schema table: read with the declaration so files
-        # written before an ALTER … ADD COLUMN merge with NULLs instead
-        # of whichever footer inference happens to pick; renamed
-        # columns come back under their declared names.
-        existing = read_declared(spark, path, meta)
-    else:
-        existing = spark.read.parquet(path)
+        return write_designated_ts(
+            dedup_within_batch(batch, ts_col, keys), path, ts_col
+        )
+    # A declared table opens with its declaration: files written before
+    # an ALTER … ADD COLUMN merge with NULLs, renamed columns come back
+    # under their declared names, and a table holding only its sidecar
+    # is an empty face to merge into.
+    existing, meta = _open(spark, path, ts_col)
 
     dates = [r[0] for r in batchd.select(pcol).distinct().collect()]
     cols = [c for c in existing.columns]
@@ -779,19 +839,9 @@ def upsert_designated_ts(
         .select(ts_col, *keys, pcol, *[f"__w.{c}" for c in value_cols])
         .select(*cols)  # restore original column order
     )
-    materialized = to_stored_names(merged.localCheckpoint(eager=True), meta)
-
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            materialized.sortWithinPartitions(pcol, ts_col)
-            .write.mode("overwrite")
-            .partitionBy(pcol)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
+    _write_layout(
+        merged.localCheckpoint(eager=True), path, ts_col, meta, "partitions"
+    )
     return pcol
 
 
@@ -807,13 +857,17 @@ def list_partitions(spark: SparkSession, path: str, ts_col: str) -> list[str]:
     dropped — or before the first write landed — must be a no-op, not a
     raw ``FileNotFoundException`` out of py4j.
     """
-    pcol = ts_col + PARTITION_SUFFIX
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return _subdirs(spark, path, ts_col + PARTITION_SUFFIX + "=")
+
+
+def _subdirs(spark: SparkSession, path: str, prefix: str) -> list[str]:
+    """Sorted ``<suffix>`` of every ``<prefix><suffix>`` subdirectory of
+    ``path`` (a missing ``path`` lists as empty) — one directory listing
+    through the Hadoop FileSystem that owns ``path``."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return []
-    prefix = pcol + "="
     out = []
     for status in fs.listStatus(hpath):
         name = status.getPath().getName()
@@ -879,9 +933,7 @@ def drop_partitions(
         victims = [d for d in existing if d in want]
     pcol = ts_col + PARTITION_SUFFIX
     jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
+    fs = hadoop_fs(spark, path)
     dropped = []
     for d in victims:
         if fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{pcol}={d}"), True):
@@ -923,9 +975,7 @@ def detach_partitions(
     assert_no_pending_updates(spark, path, "DETACH PARTITION")
     pcol = ts_col + PARTITION_SUFFIX
     jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
+    fs = hadoop_fs(spark, path)
     existing = set(list_partitions(spark, path, ts_col))
     plan = []
     for d in sorted(set(dates)):
@@ -968,9 +1018,7 @@ def attach_partitions(
     :func:`detach_partitions`. Returns the dates attached, sorted."""
     pcol = ts_col + PARTITION_SUFFIX
     jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
+    fs = hadoop_fs(spark, path)
     live = set(list_partitions(spark, path, ts_col))
     plan = []
     for d in sorted(set(dates)):
@@ -1002,19 +1050,9 @@ def list_detached_partitions(
     """Sorted dates currently sitting under ``<path>/.detached/`` — the
     catalog face of the detach/attach pair (SHOW PARTITIONS marks
     detached partitions in QuestDB)."""
-    pcol = ts_col + PARTITION_SUFFIX
-    jvm = spark._jvm
-    dpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{DETACHED_DIR}")
-    fs = dpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(dpath):
-        return []
-    prefix = pcol + "="
-    out = []
-    for status in fs.listStatus(dpath):
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith(prefix):
-            out.append(name[len(prefix):])
-    return sorted(out)
+    return _subdirs(
+        spark, f"{path}/{DETACHED_DIR}", ts_col + PARTITION_SUFFIX + "="
+    )
 
 
 def update_designated_ts(
@@ -1049,29 +1087,8 @@ def update_designated_ts(
     """
     assert_no_pending_updates(spark, path, "UPDATE (copy-on-write face)")
     pcol = ts_col + PARTITION_SUFFIX
-    meta = read_table_meta(spark, path)
-    if meta is not None:
-        existing = read_declared(spark, path, meta)
-        declared_types = {
-            c["name"]: c["spark_type"] for c in meta["columns"]
-        }
-    else:
-        existing = spark.read.parquet(path)
-        declared_types = {
-            f.name: f.dataType.simpleString() for f in existing.schema.fields
-        }
-    for col, _ in assignments:
-        if col == ts_col:
-            raise ValueError(
-                f"UPDATE cannot assign the designated timestamp "
-                f"{ts_col!r} (QuestDB refuses; it also keys the "
-                "partition layout here)"
-            )
-        if col not in declared_types or col == pcol:
-            raise ValueError(
-                f"UPDATE target column {col!r} does not exist "
-                f"(columns: {[c for c in existing.columns if c != pcol]})"
-            )
+    existing, meta = _open(spark, path, ts_col)
+    declared_types = _assignable_types(existing, meta, ts_col, assignments)
     pred = F.expr(where) if where else F.lit(True)
     # Narrow pass: which date directories hold matching rows? Collects
     # DATES (bounded by the table's partition count), never data rows.
@@ -1099,22 +1116,9 @@ def update_designated_ts(
     )
     # Spark cannot overwrite partitions it is concurrently reading:
     # materialize the rewritten slice first (day-sized by contract).
-    materialized = to_stored_names(
-        updated.localCheckpoint(eager=True), meta
+    _write_layout(
+        updated.localCheckpoint(eager=True), path, ts_col, meta, "partitions"
     )
-    saved = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "STATIC"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            materialized.sortWithinPartitions(pcol, ts_col)
-            .write.mode("overwrite")
-            .partitionBy(pcol)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", saved)
     return sorted(str(d) for d in dates)
 
 
@@ -1170,8 +1174,6 @@ def show_partitions(spark: SparkSession, path: str, ts_col: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
-
     pcol = ts_col + PARTITION_SUFFIX
     schema = (
         f"part_index int, partition_by string, name string, "
@@ -1196,16 +1198,13 @@ def show_partitions(spark: SparkSession, path: str, ts_col: str) -> DataFrame:
 
     try:
         days = per_day(spark.read.parquet(path), True)
-    except Exception as exc:
+    except AnalysisException as exc:
         # Every partition dropped (dir of stray markers, zero footers) is
         # an empty live listing; real read errors re-raise (the
         # _ddl_ts_col contract).
-        if "UNABLE_TO_INFER_SCHEMA" in str(exc) or "PATH_NOT_FOUND" in str(
-            exc
-        ):
-            days = None
-        else:
+        if not no_table_files(exc):
             raise
+        days = None
     if list_detached_partitions(spark, path, ts_col):
         # basePath keeps the <pcol>=… directory parsing while reading
         # under the hidden subdir Spark's live listing ignores.
@@ -1317,45 +1316,27 @@ def pending_update_seqs(spark: SparkSession, path: str) -> list[int]:
     ``<path>/.updates/`` (a delta dir without its ``_SUCCESS`` marker is
     a crashed write — invisible to reads, superseded by seq allocation,
     reclaimed by VACUUM)."""
-    jvm = spark._jvm
-    upath = jvm.org.apache.hadoop.fs.Path(f"{path}/{UPDATES_DIR}")
-    fs = upath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(upath):
+    seqs = _all_update_seqs(spark, path)
+    if not seqs:
         return []
-    seqs = []
-    for status in fs.listStatus(upath):
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith("delta_"):
-            try:
-                seq = int(name[len("delta_"):])
-            except ValueError:
-                continue
-            if fs.exists(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{path}/{UPDATES_DIR}/{name}/_SUCCESS"
-                )
-            ):
-                seqs.append(seq)
-    return sorted(seqs)
+    jvm = spark._jvm
+    fs = hadoop_fs(spark, path)
+    return [
+        s for s in seqs
+        if fs.exists(jvm.org.apache.hadoop.fs.Path(
+            f"{path}/{UPDATES_DIR}/delta_{s}/_SUCCESS"
+        ))
+    ]
 
 
 def _all_update_seqs(spark: SparkSession, path: str) -> list[int]:
     """Every allocated delta seq, committed or crashed — the allocator
     must never reuse a crashed write's number."""
-    jvm = spark._jvm
-    upath = jvm.org.apache.hadoop.fs.Path(f"{path}/{UPDATES_DIR}")
-    fs = upath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(upath):
-        return []
-    out = []
-    for status in fs.listStatus(upath):
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith("delta_"):
-            try:
-                out.append(int(name[len("delta_"):]))
-            except ValueError:
-                continue
-    return sorted(out)
+    return sorted(
+        int(s)
+        for s in _subdirs(spark, f"{path}/{UPDATES_DIR}", "delta_")
+        if s.isdecimal()
+    )
 
 
 def assert_no_pending_updates(
@@ -1375,27 +1356,12 @@ def assert_no_pending_updates(
         )
 
 
-def _base_with_identity(
-    spark: SparkSession, path: str, ts_col: str
-) -> DataFrame:
-    """The base table in declared column space plus the file-source row
-    identity (``_metadata.file_path``, ``_metadata.row_index``) — read
-    in the SAME scan projection, no extra pass."""
-    pcol = ts_col + PARTITION_SUFFIX
-    meta = read_table_meta(spark, path)
-    if meta is not None:
-        fields = ", ".join(
-            f"{stored_name(c)} {c['spark_type']}" for c in meta["columns"]
-        )
-        df = spark.read.schema(f"{fields}, {pcol} date").parquet(path)
-        sel = [
-            F.col(stored_name(c)).alias(c["name"]) for c in meta["columns"]
-        ]
-    else:
-        df = spark.read.parquet(path)
-        sel = [F.col(c) for c in df.columns if c != pcol]
+def _with_identity(df: DataFrame, pcol: str) -> DataFrame:
+    """An opened base face plus the file-source row identity
+    (``_metadata.file_path``, ``_metadata.row_index``) — read in the
+    SAME scan projection, no extra pass."""
     return df.select(
-        *sel,
+        *[F.col(c) for c in df.columns if c != pcol],
         F.col(pcol),
         F.col("_metadata.file_path").alias(_ID_FILE),
         F.col("_metadata.row_index").alias(_ID_POS),
@@ -1403,19 +1369,18 @@ def _base_with_identity(
 
 
 def _deltas_latest(
-    spark: SparkSession, path: str, ts_col: str
-) -> DataFrame | None:
-    """Latest committed delta version per origin row, in declared column
-    space, materialized once (deltas are matched-rows-sized by
-    construction; pinning them here keeps the merge plan from re-running
-    the versioning window per action)."""
+    spark: SparkSession,
+    path: str,
+    seqs: list[int],
+    meta: dict | None,
+    pcol: str,
+) -> DataFrame:
+    """Latest version per origin row across the committed deltas
+    ``seqs``, in declared column space, materialized once (deltas are
+    matched-rows-sized by construction; pinning them here keeps the
+    merge plan from re-running the versioning window per action)."""
     from pyspark.sql import Window
 
-    seqs = pending_update_seqs(spark, path)
-    if not seqs:
-        return None
-    pcol = ts_col + PARTITION_SUFFIX
-    meta = read_table_meta(spark, path)
     if meta is not None:
         cols = meta_column_tuples(meta)
         fields = ", ".join(f"{s} {t}" for _, t, _, s in cols)
@@ -1473,32 +1438,6 @@ def _tombstone_ids(latest: DataFrame) -> DataFrame:
     return ids.hint("merge")
 
 
-def _merged_with_identity(
-    spark: SparkSession, path: str, ts_col: str
-) -> DataFrame:
-    """The merge-on-read face WITH row identity: base rows not
-    superseded keep their own (file, pos); delta rows carry their
-    ORIGIN identity forward, so a second UPDATE over already-updated
-    rows supersedes by the same key. Partitions bearing no delta pass
-    through untouched (no join); the tombstone side broadcasts only
-    within the measured caps (see :func:`_tombstone_ids`)."""
-    base = _base_with_identity(spark, path, ts_col)
-    latest = _deltas_latest(spark, path, ts_col)
-    if latest is None:
-        return base
-    pcol = ts_col + PARTITION_SUFFIX
-    delta_dates = [
-        r[0] for r in latest.select(pcol).distinct().collect()
-    ]
-    untouched = base.filter(~F.col(pcol).isin(delta_dates))
-    masked = base.filter(F.col(pcol).isin(delta_dates)).join(
-        _tombstone_ids(latest),
-        [_ID_FILE, _ID_POS],
-        "left_anti",
-    )
-    return untouched.unionByName(masked).unionByName(latest)
-
-
 def read_designated_merged(
     spark: SparkSession, path: str, ts_col: str
 ) -> DataFrame:
@@ -1506,39 +1445,12 @@ def read_designated_merged(
     deltas, identity columns dropped. With no pending deltas this is
     exactly the plain declared read — zero overhead.
 
-    Unlike the UPDATE path's :func:`_merged_with_identity` (which must
-    key EVERY row in case the next predicate matches it), the read face
-    computes the ``_metadata`` identity only on the delta-bearing
-    partitions — the untouched branch is the PLAIN scan, so the read
-    tax is confined to the partitions that actually have deltas."""
-    meta = read_table_meta(spark, path)
-
-    def plain() -> DataFrame:
-        if meta is not None:
-            return read_declared(spark, path, meta)
-        return spark.read.parquet(path)
-
-    latest = _deltas_latest(spark, path, ts_col)
-    if latest is None:
-        return plain()
-    pcol = ts_col + PARTITION_SUFFIX
-    delta_dates = [
-        r[0] for r in latest.select(pcol).distinct().collect()
-    ]
-    untouched = plain().filter(~F.col(pcol).isin(delta_dates))
-    masked = (
-        _base_with_identity(spark, path, ts_col)
-        .filter(F.col(pcol).isin(delta_dates))
-        .join(
-            _tombstone_ids(latest),
-            [_ID_FILE, _ID_POS],
-            "left_anti",
-        )
-        .drop(_ID_FILE, _ID_POS)
-    )
-    return untouched.unionByName(masked).unionByName(
-        latest.drop(_ID_FILE, _ID_POS)
-    )
+    Unlike the UPDATE path's identity face (which must key EVERY row in
+    case the next predicate matches it), the read face computes the
+    ``_metadata`` identity only on the delta-bearing partitions — the
+    untouched branch is the PLAIN scan, so the read tax is confined to
+    the partitions that actually have deltas (:func:`_open`)."""
+    return _open(spark, path, ts_col)[0]
 
 
 def update_designated_mor(
@@ -1556,32 +1468,13 @@ def update_designated_mor(
     delta touches (read back from the delta itself — matched-rows-
     sized, not a second base scan)."""
     pcol = ts_col + PARTITION_SUFFIX
-    meta = read_table_meta(spark, path)
-    merged = _merged_with_identity(spark, path, ts_col)
+    merged, meta = _open(spark, path, ts_col, identity=True)
+    types = _assignable_types(merged, meta, ts_col, assignments)
     declared = [
         c for c in merged.columns
         if c not in (pcol, _ID_FILE, _ID_POS)
     ]
-    types = dict(
-        (c["name"], c["spark_type"]) for c in meta["columns"]
-    ) if meta is not None else {
-        f.name: f.dataType.simpleString()
-        for f in merged.schema.fields
-        if f.name in set(declared)
-    }
     assigned = dict(assignments)
-    for col in assigned:
-        if col == ts_col:
-            raise ValueError(
-                f"UPDATE cannot assign the designated timestamp "
-                f"{ts_col!r} (QuestDB refuses; it also keys the "
-                "partition layout here)"
-            )
-        if col not in types or col == pcol:
-            raise ValueError(
-                f"UPDATE target column {col!r} does not exist "
-                f"(columns: {declared})"
-            )
     matched = merged.filter(F.expr(where)) if where else merged
     seq = (_all_update_seqs(spark, path) or [0])[-1] + 1
     new_rows = matched.select(
@@ -1599,9 +1492,9 @@ def update_designated_mor(
         F.lit(seq).cast("int").alias(_ID_SEQ),
     )
     out = f"{path}/{UPDATES_DIR}/delta_{seq}"
-    to_stored_names(
-        new_rows, meta
-    ).write.mode("error").parquet(out)
+    # A delta is flat files keyed by origin row, not partitioned table
+    # files, so it bypasses _write_layout.
+    to_stored_names(new_rows, meta).write.mode("error").parquet(out)
     dates = sorted(
         str(r[0])
         for r in spark.read.parquet(out).select(pcol).distinct().collect()
@@ -1609,7 +1502,7 @@ def update_designated_mor(
     if not dates:
         # Empty match: drop the empty delta rather than leaving a
         # zero-row dir every read must list and merge against.
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(out)
-        p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
+        hadoop_fs(spark, out).delete(
+            spark._jvm.org.apache.hadoop.fs.Path(out), True
+        )
     return dates

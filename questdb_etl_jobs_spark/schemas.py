@@ -30,6 +30,18 @@ PURCHASES_RAW = T.StructType(
     ]
 )
 
+
+def raw_purchases_reader(reader):
+    """``reader`` — ``spark.read`` or ``spark.readStream`` — set to scan
+    purchase exports into the raw shape: :data:`PURCHASES_RAW`, parsed
+    PERMISSIVE so a malformed line lands whole in ``_corrupt_record``."""
+    return (
+        reader.schema(PURCHASES_RAW)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+    )
+
+
 #: Loaded table shape (reference sql/create-table.sql:1):
 #: purchases(buyer STRING, item_id INT, quantity INT, price INT,
 #:           purchase_date TIMESTAMP) timestamp(purchase_date)

@@ -15,20 +15,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from questdb_etl_jobs_spark.schemas import PURCHASES_RAW
+from questdb_etl_jobs_spark.schemas import raw_purchases_reader
 
 
 def read_purchases_csv(
     spark: SparkSession, path: str, with_file_metadata: bool = False
 ) -> DataFrame:
     """Scan reference-format purchase CSVs into the raw (all-string) shape."""
-    df = (
-        spark.read.schema(PURCHASES_RAW)
-        .option("header", "false")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(path)
-    )
+    df = raw_purchases_reader(spark.read).option("header", "false").csv(path)
     if with_file_metadata:
         df = df.select(
             "*",

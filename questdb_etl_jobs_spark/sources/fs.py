@@ -1,4 +1,4 @@
-"""Filesystem existence probe through Spark's Hadoop FileSystem layer.
+"""Filesystem access through Spark's Hadoop FileSystem layer.
 
 Incremental writers (materialized views, designated-ts upsert) need to
 distinguish "target does not exist yet → initialize" from "target exists
@@ -14,12 +14,31 @@ writers resolve paths.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+
+#: Error conditions of a read over a path that does not exist and over
+#: a directory holding no data-file footers.
+_NO_TABLE_FILES = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """The Hadoop FileSystem that owns ``path`` (a py4j handle)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
 def hadoop_path_exists(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` exists per the Hadoop FileSystem that owns it."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
+    return bool(
+        hadoop_fs(spark, path).exists(spark._jvm.org.apache.hadoop.fs.Path(path))
+    )
+
+
+def no_table_files(exc: AnalysisException) -> bool:
+    """True iff a footer-inferring read failed because there are no
+    table files to read: the path is missing, or the directory holds no
+    footers (every partition dropped, only markers or the sidecar
+    left). A corrupt or unreadable file is a real error, not an empty
+    table."""
+    return exc.getCondition() in _NO_TABLE_FILES

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from questdb_etl_jobs_spark.schemas import PURCHASES_RAW
+from questdb_etl_jobs_spark.schemas import raw_purchases_reader
 
 
 def read_jsonl(
@@ -64,12 +64,7 @@ def read_purchases_jsonl(
     spark: SparkSession, path: str, with_file_metadata: bool = False
 ) -> DataFrame:
     """Scan JSONL purchase records into the raw (all-string) shape."""
-    df = (
-        spark.read.schema(PURCHASES_RAW)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
+    df = raw_purchases_reader(spark.read).json(path)
     if with_file_metadata:
         df = df.select(
             "*",

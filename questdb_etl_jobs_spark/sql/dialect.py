@@ -78,8 +78,15 @@ from __future__ import annotations
 import hashlib
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from questdb_etl_jobs_spark.sources.fs import (
+    hadoop_fs,
+    hadoop_path_exists,
+    no_table_files,
+)
 
 
 class QuestDBSQLError(ValueError):
@@ -3464,8 +3471,6 @@ def _register_catalog_tables(
         infer_designated_ts,
         register_designated_table,
     )
-    from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
-
     overlay = dict(designated)
     for name, path in tables.items():
         if not re.search(rf"\b{re.escape(name)}\b", select_text):
@@ -3551,45 +3556,33 @@ def _ddl_insert_land(
     declared schema carries ``DEDUP UPSERT KEYS`` — QuestDB's
     deduplicating upsert (rows matching an existing (ts, keys) replace
     it; within-batch duplicates resolve content-deterministically).
-    Returns the table's partition dates."""
+    Both land declared names: the designated writers translate them to
+    stored names. Returns the table's partition dates."""
     from questdb_etl_jobs_spark.plans.designated import (
-        dedup_within_batch,
         list_partitions,
         read_table_meta,
-        to_stored_names,
         upsert_designated_ts,
         write_designated_ts,
     )
 
-    meta = read_table_meta(spark, path)
-    dkeys = (meta or {}).get("dedup_keys")
+    dkeys = (read_table_meta(spark, path) or {}).get("dedup_keys")
     if dkeys:
         others = [k for k in dkeys if k != ts_col]
-        if _parquet_has_footers(spark, path):
-            # upsert_designated_ts reads the sidecar itself and lands
-            # stored names at its write boundary.
-            upsert_designated_ts(spark, df, path, ts_col, others)
-        else:
-            # First rows into a declared dedup table: nothing to merge
-            # against, but within-batch duplicates still resolve.
-            write_designated_ts(
-                to_stored_names(
-                    dedup_within_batch(df, ts_col, others), meta
-                ),
-                path, ts_col, mode="append",
-            )
+        upsert_designated_ts(spark, df, path, ts_col, others)
     else:
-        write_designated_ts(to_stored_names(df, meta), path, ts_col,
-                            mode="append")
+        write_designated_ts(df, path, ts_col, mode="append")
     return list_partitions(spark, path, ts_col)
 
 
 def _parquet_has_footers(spark: SparkSession, path: str) -> bool:
     """True when ``path`` holds at least one readable parquet footer
-    (schema-only probe; a missing/empty dir reads as False)."""
+    (schema-only probe; a missing dir or one with no footers reads as
+    False, a corrupt file raises)."""
     try:
         return bool(spark.read.parquet(path).columns)
-    except Exception:
+    except AnalysisException as exc:
+        if not no_table_files(exc):
+            raise
         return False
 
 
@@ -3650,8 +3643,6 @@ def _missing_table_error(
     COLUMN TYPE swap that crashed inside its two-rename gap (DEPLOY.md
     reader contract) — that case names the one-rename recovery instead
     of reporting a plain missing table."""
-    from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
-
     if hadoop_path_exists(spark, path + ".__old"):
         return QuestDBSQLError(
             f"table {name!r} is mid-swap: {path} is absent but the "
@@ -3674,8 +3665,6 @@ def _ddl_ts_col(
     retention statement that could not inspect its target surfaces the
     error instead of reporting a successful no-op."""
     from questdb_etl_jobs_spark.plans.designated import infer_designated_ts
-    from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
-
     if name in designated:
         return designated[name]
     if not hadoop_path_exists(spark, path):
@@ -3689,15 +3678,13 @@ def _ddl_ts_col(
         return meta["designated"]
     try:
         columns = spark.read.parquet(path).columns
-    except Exception as exc:
+    except AnalysisException as exc:
         # An existing dir holding zero parquet footers (all partitions
         # dropped, stray markers left) is the same empty-table no-op;
         # everything else is a real error.
-        if "PATH_NOT_FOUND" in str(exc) or "UNABLE_TO_INFER_SCHEMA" in str(
-            exc
-        ):
-            return None
-        raise
+        if not no_table_files(exc):
+            raise
+        return None
     ts = infer_designated_ts(columns)
     if ts is None:
         raise QuestDBSQLError(
@@ -3880,8 +3867,6 @@ def questdb_ddl(
                 f"PARTITION BY {part} unsupported: this engine's "
                 "designated-ts partitions are day directories"
             )
-        from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
-
         if hadoop_path_exists(spark, path):
             # QuestDB errors on CREATE over an existing table; the
             # IF NOT EXISTS form no-ops WITHOUT running the SELECT.
@@ -3922,8 +3907,6 @@ def questdb_ddl(
             meta_column_tuples,
             write_table_meta,
         )
-        from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
-
         name, path = _ddl_table_path(m.group("table"), tables)
         src_name, src_path = _ddl_table_path(m.group("src"), tables)
         if hadoop_path_exists(spark, path):
@@ -4002,8 +3985,6 @@ def questdb_ddl(
                 f"designated column {ts_col!r} must be TIMESTAMP, "
                 f"got {declared[ts_col]!r}"
             )
-        from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
-
         dedup_keys: list[str] | None = None
         if m.group("dedup") is not None:
             # dict.fromkeys: first-occurrence order, duplicates dropped
@@ -4339,17 +4320,14 @@ def questdb_ddl(
         # so dropping is a recursive directory delete (data, layout,
         # sidecar alike). Missing table: IF EXISTS no-ops, the bare
         # form raises (QuestDB errors on a missing table).
-        from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
-
         name, path = _ddl_table_path(m.group("table"), tables)
         if not hadoop_path_exists(spark, path):
             if m.group("ifx"):
                 return []
             raise _missing_table_error(spark, name, path)
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(hpath, True)
+        hadoop_fs(spark, path).delete(
+            spark._jvm.org.apache.hadoop.fs.Path(path), True
+        )
         return []
 
     m = _RENAME_TABLE_RE.match(text)
@@ -4358,8 +4336,6 @@ def questdb_ddl(
         # be in the table→path mapping (the caller's catalog has to
         # know the destination), the source must exist, the
         # destination path must be free.
-        from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
-
         src_name, src_path = _ddl_table_path(m.group("src"), tables)
         dst_name, dst_path = _ddl_table_path(m.group("dst"), tables)
         if not hadoop_path_exists(spark, src_path):
@@ -4383,7 +4359,7 @@ def questdb_ddl(
         jvm = spark._jvm
         sp = jvm.org.apache.hadoop.fs.Path(src_path)
         dp = jvm.org.apache.hadoop.fs.Path(dst_path)
-        fs = sp.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs = hadoop_fs(spark, src_path)
         parent = dp.getParent()
         if parent is not None:
             fs.mkdirs(parent)
@@ -4402,9 +4378,8 @@ def questdb_ddl(
         _ensure_table_meta(spark, name, path, designated)
         from questdb_etl_jobs_spark.plans.designated import TABLE_META_FILE
 
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = hadoop_fs(spark, path)
         for st in fs.listStatus(hpath):
             if st.getPath().getName() != TABLE_META_FILE:
                 fs.delete(st.getPath(), True)
@@ -5065,8 +5040,6 @@ def questdb_show(
         # exists (a fully-dropped directory is still an empty TABLE —
         # only a missing path means no table). One row per name, the
         # QuestDB 8 column spelling.
-        from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
-
         names = sorted(
             n for n, p in tables.items() if hadoop_path_exists(spark, p)
         )
@@ -5075,8 +5048,6 @@ def questdb_show(
         )
     m = _SHOW_COLUMNS_RE.match(text)
     if m:
-        from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
-
         name, path = _ddl_table_path(m.group("table"), tables)
         if not hadoop_path_exists(spark, path):
             # Missing table: empty listing, same contract as the other
@@ -5108,21 +5079,19 @@ def questdb_show(
         # neither marks a designated ts; the flag is just false).
         try:
             return show_columns(spark, path, designated.get(name))
-        except Exception as exc:
+        except AnalysisException as exc:
             # A dir holding zero parquet footers (every partition
             # dropped, stray markers left) is the same empty listing the
             # missing-table branch returns — the docstring's tolerance
             # contract covers both catalog faces. Real read errors
             # re-raise (the _ddl_ts_col convention).
-            if "UNABLE_TO_INFER_SCHEMA" in str(exc) or "PATH_NOT_FOUND" in str(
-                exc
-            ):
-                return spark.createDataFrame(
-                    [],
-                    "column_name string, column_type string, "
-                    "designated boolean",
-                )
-            raise
+            if not no_table_files(exc):
+                raise
+            return spark.createDataFrame(
+                [],
+                "column_name string, column_type string, "
+                "designated boolean",
+            )
     m = _SHOW_CREATE_TABLE_RE.match(text)
     if m:
         # SHOW CREATE TABLE — reconstruct the declaration from the

@@ -26,8 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from questdb_etl_jobs_spark.schemas import PURCHASES_RAW
-from questdb_etl_jobs_spark.pipeline import anonymize_and_cast
+from questdb_etl_jobs_spark.schemas import raw_purchases_reader
+from questdb_etl_jobs_spark.pipeline import anonymize_and_cast, split_quarantine
 from questdb_etl_jobs_spark.functions.hashing import stable_id
 from questdb_etl_jobs_spark.plans.designated import (
     upsert_designated_ts,
@@ -41,12 +41,7 @@ def stream_purchases_csv(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming scan of reference-format CSVs landing in ``input_dir``."""
-    reader = (
-        spark.readStream.schema(PURCHASES_RAW)
-        .option("header", "false")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-    )
+    reader = raw_purchases_reader(spark.readStream).option("header", "false")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.csv(input_dir)
@@ -60,11 +55,7 @@ def stream_purchases_jsonl(
     """Streaming scan of JSONL purchase exports (sources/json_source.py's
     streaming face): same raw all-string shape as the CSV stream, so the
     whole pipeline downstream is format-agnostic."""
-    reader = (
-        spark.readStream.schema(PURCHASES_RAW)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-    )
+    reader = raw_purchases_reader(spark.readStream)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.json(input_dir)
@@ -120,17 +111,7 @@ def run_stream_to_table(
         raw = stream_purchases_jsonl(spark, input_dir)
     else:
         raise ValueError(f"source_format must be csv or jsonl, got {source_format!r}")
-    typed = anonymize_and_cast(raw)
-    bad_cond = (
-        F.col("_corrupt_record").isNotNull()
-        | F.col("buyer").isNull()
-        | F.col("item_id").isNull()
-        | F.col("quantity").isNull()
-        | F.col("price").isNull()
-        | F.col("purchase_date").isNull()
-    )
-
-    good = typed.filter(~bad_cond).drop("_corrupt_record")
+    good, bad = split_quarantine(anonymize_and_cast(raw))
     good = good.withWatermark("purchase_date", lateness)
     if dedup:
         good = (
@@ -167,8 +148,7 @@ def run_stream_to_table(
         .outputMode("append")
     )
     bad_writer = (
-        typed.filter(bad_cond)
-        .writeStream.foreachBatch(write_bad)
+        bad.writeStream.foreachBatch(write_bad)
         .option("checkpointLocation", f"{checkpoint_path}/bad")
         .outputMode("append")
     )

@@ -41,6 +41,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from questdb_etl_jobs_spark.operators.clustering import assign_clusters
+from questdb_etl_jobs_spark.sources.fs import hadoop_fs, hadoop_path_exists
 
 
 @dataclass
@@ -147,18 +148,12 @@ _STATE_RE = re.compile(r"^kmeans_state\.(\d+)\.json$")
 _JOURNAL_RETAIN = 3
 
 
-def _hadoop(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
 def _save_state(
     spark: SparkSession, checkpoint_dir: str, state: StreamKMeansState,
     batch_id: int,
 ) -> None:
     sdir = f"{checkpoint_dir.rstrip('/')}/{_STATE_DIR}"
-    jvm, fs = _hadoop(spark, sdir)
+    jvm, fs = spark._jvm, hadoop_fs(spark, sdir)
     fs.mkdirs(jvm.org.apache.hadoop.fs.Path(sdir))
     payload = json.dumps(
         {
@@ -198,12 +193,10 @@ def _load_latest_state(
 ) -> tuple[StreamKMeansState, int] | None:
     """Highest-versioned journaled state and its last absorbed batch id,
     or ``None`` when no journal exists."""
-    from questdb_etl_jobs_spark.sources.fs import hadoop_path_exists
-
     sdir = f"{checkpoint_dir.rstrip('/')}/{_STATE_DIR}"
     if not hadoop_path_exists(spark, sdir):
         return None
-    jvm, fs = _hadoop(spark, sdir)
+    jvm, fs = spark._jvm, hadoop_fs(spark, sdir)
     versions: list[tuple[int, str]] = []
     for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(sdir)):
         m = _STATE_RE.match(st.getPath().getName())

@@ -1393,6 +1393,26 @@ def test_show_partitions_after_full_drop_is_empty_listing(spark, tmp_path):
     assert out.count() == 0
 
 
+def test_corrupt_table_files_raise_instead_of_empty(spark, tmp_path):
+    """Only a missing path or a directory without footers is "no table
+    files yet": a table directory whose part file is not parquet raises
+    from CREATE TABLE and SHOW PARTITIONS alike instead of passing for
+    an empty table (CREATE must not declare a table over it)."""
+    from questdb_etl_jobs_spark.sql.dialect import questdb_ddl, questdb_show
+
+    path = tmp_path / "t"
+    path.mkdir()
+    (path / "part-00000.parquet").write_bytes(b"not a parquet file")
+    tables = {"t": str(path)}
+    with pytest.raises(Exception, match="parquet"):
+        questdb_ddl(
+            spark, "CREATE TABLE t(v INT, ts TIMESTAMP) TIMESTAMP(ts)", tables
+        )
+    assert [p.name for p in path.iterdir()] == ["part-00000.parquet"]
+    with pytest.raises(Exception, match="parquet"):
+        questdb_show(spark, "SHOW PARTITIONS FROM t", tables).collect()
+
+
 def test_recursive_spine_empty_series_yields_empty_fill(spark):
     """The q181 recursion's base is guarded (lo IS NOT NULL): a filter
     matching nothing must produce an EMPTY fill, not a single NULL-day
@@ -2015,6 +2035,8 @@ def test_create_table_dedup_upsert_keys_contract(spark, tmp_path):
         "('a', 2, TIMESTAMP '2024-01-01 00:00:00')",  # within-batch dup
         tables,
     )
+    first = register_designated_table(spark, "t", tables["t"]).collect()
+    assert [(r.sym, r.v) for r in first] == [("a", 2)]
     questdb_ddl(
         spark,
         "INSERT INTO t(sym, v, ts) VALUES"
@@ -2320,6 +2342,7 @@ def test_rename_column_is_declaration_level(spark, tmp_path):
     rename, and the guards raise (designated ts, existing name,
     missing column)."""
     from questdb_etl_jobs_spark.plans.designated import (
+        read_designated_ts,
         read_table_meta,
         register_designated_table,
     )
@@ -2346,6 +2369,9 @@ def test_rename_column_is_declaration_level(spark, tmp_path):
     # Physical files still carry 'sym' (no rewrite happened)…
     physical = spark.read.parquet(tables["u"]).columns
     assert "sym" in physical and "ticker" not in physical
+    assert read_designated_ts(spark, tables["u"], "ts").columns == [
+        "ticker", "px", "ts",
+    ]
     # …but the declared read serves 'ticker', and the dedup key moved
     # with the rename: re-stating (ts, ticker='A') REPLACES.
     meta = read_table_meta(spark, tables["u"])

@@ -2144,6 +2144,7 @@ def test_matview_lease_heartbeat_prevents_live_takeover(spark, tmp_path):
     import pytest
 
     from questdb_etl_jobs_spark.operators import matview as mv
+    from questdb_etl_jobs_spark.sources.fs import hadoop_fs
 
     df = _mv_rows(spark)
     path = str(tmp_path / "mv")
@@ -2163,7 +2164,7 @@ def test_matview_lease_heartbeat_prevents_live_takeover(spark, tmp_path):
     # …so a concurrent compactor sees a FRESH lock: no takeover.
     assert mv._acquire_compaction_lease(spark, staged, 600.0) is None
     assert mv.compact_staged_batches(spark, path, lease_ttl_sec=600.0) is False
-    jvm, fs = mv._hadoop_fs(spark, staged)
+    jvm, fs = spark._jvm, hadoop_fs(spark, staged)
     assert mv._lock_token(jvm, fs, staged) == t1
     # Dead holder: renewals stop, the lock ages out → takeover wins…
     os.utime(lock, (old, old))
@@ -3258,6 +3259,7 @@ def test_matview_lease_release_is_token_atomic(spark, tmp_path):
     BACK; releasing with one's own token removes it; releasing a
     vanished lock is a no-op."""
     from questdb_etl_jobs_spark.operators import matview as mv
+    from questdb_etl_jobs_spark.sources.fs import hadoop_fs
 
     df = _mv_rows(spark)
     path = str(tmp_path / "mv")
@@ -3265,7 +3267,7 @@ def test_matview_lease_release_is_token_atomic(spark, tmp_path):
         spark, df, path, 0, "ts", "day", "v", ["k"]
     )
     staged = mv._staged_dir(path)
-    jvm, fs = mv._hadoop_fs(spark, staged)
+    jvm, fs = spark._jvm, hadoop_fs(spark, staged)
 
     # New holder B owns the lock; old holder A releases with its stale
     # token → lock must survive, still carrying B.

@@ -783,8 +783,10 @@ def test_mor_update_basic_and_stacking(spark, tmp_path):
     import os
 
     from questdb_etl_jobs_spark.plans.designated import (
+        compact_designated,
         pending_update_seqs,
         read_designated_merged,
+        read_designated_ts,
         register_designated_table,
         update_designated_mor,
     )
@@ -825,6 +827,18 @@ def test_mor_update_basic_and_stacking(spark, tmp_path):
         for r in register_designated_table(spark, "m", path).collect()
     }
     assert reg == got
+    # …and so does every other reader: the time-range read…
+    assert {
+        r.sym: r.v for r in read_designated_ts(spark, path, "ts").collect()
+    } == got
+    # …and compaction, whose output is the same table, compacted.
+    compacted = str(tmp_path / "m_compacted")
+    compact_designated(spark, path, compacted, "ts")
+    assert {
+        r.sym: r.v
+        for r in register_designated_table(spark, "mc", compacted).collect()
+    } == got
+    assert pending_update_seqs(spark, compacted) == []
     # Stacking: update an already-updated row — latest seq wins.
     update_designated_mor(
         spark, path, "ts", [("v", "v + 0.5")], "sym = 'A'"

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import ast
 import csv
 from datetime import datetime
 from pathlib import Path
@@ -421,6 +422,49 @@ def test_upsert_designated_ts_merge_semantics(spark, tmp_path):
         for r in read_designated_ts(spark, path, "ts").collect()
     }
     assert again == got
+
+
+_PKG = Path(__file__).resolve().parents[1] / "questdb_etl_jobs_spark"
+
+
+def _session_overwrite_mode_sets(source: str) -> list[int]:
+    """Lines calling ``<x>.conf.set`` on the partition-overwrite key."""
+    return [
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "set"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "conf"
+        and any(
+            isinstance(a, ast.Constant) and isinstance(a.value, str)
+            and "partitionOverwriteMode" in a.value
+            for a in node.args
+        )
+    ]
+
+
+def test_guard_flags_session_overwrite_mode():
+    src = (
+        "def f(spark, df):\n"
+        "    spark.conf.set('spark.sql.sources.partitionOverwriteMode', 'dynamic')\n"
+        "    spark.conf.set('spark.sql.shuffle.partitions', '4')\n"
+        "    df.write.option('partitionOverwriteMode', 'dynamic')\n"
+    )
+    assert _session_overwrite_mode_sets(src) == [2]
+
+
+def test_no_session_conf_partition_overwrite():
+    """Dynamic partition overwrite is a per-write option everywhere: the
+    session conf is shared by every thread of a session, so another
+    writer could change it between a set and the write it guards."""
+    found = [
+        f"{path.relative_to(_PKG)}:{line}"
+        for path in sorted(_PKG.rglob("*.py"))
+        for line in _session_overwrite_mode_sets(path.read_text())
+    ]
+    assert found == []
 
 
 def test_jdbc_sink_executes_against_embedded_derby(spark):
